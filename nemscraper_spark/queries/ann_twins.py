@@ -35,6 +35,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from nemscraper_spark.queries.common import load_table, register
+from nemscraper_spark.queries.trunk_cache import memo, session_key
 
 DIM = 64
 GRID = 1000
@@ -125,31 +126,15 @@ _MD5_SAMPLE = (
 )
 
 
-# Grid frames and the bounded training samples drawn from them are
-# identical for every ANN-family query in a session, so both are built
-# ONCE per (application, sf_dir) and shared — re-deriving the grid and
-# re-collecting the sample per query was ~20% of the family's combined
-# bench time.  Keys are (applicationId, sf_dir, kind) STRINGS — never
-# object ids, which can be reused after GC — and the grid's own key is
-# attached to the cached DataFrame so the sample memoizers below only
-# ever cache against an explicitly-keyed grid (any other frame
-# bypasses the cache).  Entries live for the process (bounded: one
-# persisted n×64-bigint frame + a few k×64 sample lists per
-# (application, sf_dir) pair actually queried).
-_GRID_CACHE: dict[tuple[str, str, str], object] = {}
-_SAMPLE_CACHE: dict[tuple, list[list[int]]] = {}
-
-
 def _cached_grid(spark, sf_dir, kind: str, build):
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    df = _GRID_CACHE.get(key)
-    if df is None:
-        from pyspark import StorageLevel
+    """The session's persisted grid frame of this kind: identical for
+    every ANN-family query, so re-deriving it per query was ~20% of
+    the family's combined bench time."""
+    from nemscraper_spark.queries.trunk_cache import trunk
 
-        df = build(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-        df._nemspark_grid_key = key
-        _GRID_CACHE[key] = df
-    return df
+    return trunk(
+        "ann_grid", session_key(spark, sf_dir, kind), lambda: build(spark, sf_dir)
+    )
 
 
 def _int_grid(spark, sf_dir):
@@ -172,44 +157,40 @@ def _build_int_grid(spark, sf_dir):
     )
 
 
-def _md5_sample_rows(e, n: int):
-    """First n (vec_id, e) rows under md5(vec_id) ordering — bounded
-    collect (n ≪ corpus by construction: coarse-quantizer sizing keeps
-    it broadcastable), the twin of _MD5_SAMPLE.  Memoized per cached
-    grid frame (explicit grid key; other frames bypass the cache)."""
-    gkey = getattr(e, "_nemspark_grid_key", None)
-    key = None if gkey is None else ("md5", gkey, n)
-    if key is not None and key in _SAMPLE_CACHE:
-        return _SAMPLE_CACHE[key]
-    rows = [
-        [int(x) for x in r.e]
-        for r in e.withColumn("r", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("r", "vec_id")
-        .limit(n)
-        .collect()
-    ]
-    if key is not None:
-        _SAMPLE_CACHE[key] = rows
-    return rows
+def _md5_sample_rows(spark, sf_dir, n: int):
+    """First n int-grid (vec_id, e) rows under md5(vec_id) ordering —
+    bounded collect (n ≪ corpus by construction: coarse-quantizer
+    sizing keeps it broadcastable), the twin of _MD5_SAMPLE.
+    Memoized per (session, sf_dir, n)."""
+
+    def compute():
+        e = _int_grid(spark, sf_dir)
+        return [
+            [int(x) for x in r.e]
+            for r in e.withColumn("r", F.md5(F.col("vec_id").cast("string")))
+            .orderBy("r", "vec_id")
+            .limit(n)
+            .collect()
+        ]
+
+    return memo("ann_sample", session_key(spark, sf_dir, "md5", n), compute)
 
 
-def _id_sample_rows(e, n: int):
-    """First n rows by vec_id — the PQ training sample (production's
-    train-on-prefix recipe: the query vectors sit inside the sample by
-    construction, which is what makes a K=16 codebook usable).  Bounded
-    collect; at 100 TB this is the standard FAISS train-on-sample
-    pattern with a deterministic sample.  Memoized per cached grid
-    (explicit grid key; other frames bypass the cache)."""
-    gkey = getattr(e, "_nemspark_grid_key", None)
-    key = None if gkey is None else ("id", gkey, n)
-    if key is not None and key in _SAMPLE_CACHE:
-        return _SAMPLE_CACHE[key]
-    rows = [
-        [int(x) for x in r.e] for r in e.orderBy("vec_id").limit(n).collect()
-    ]
-    if key is not None:
-        _SAMPLE_CACHE[key] = rows
-    return rows
+def _id_sample_rows(spark, sf_dir, n: int):
+    """First n norm-grid rows by vec_id — the PQ training sample
+    (production's train-on-prefix recipe: the query vectors sit inside
+    the sample by construction, which is what makes a K=16 codebook
+    usable).  Bounded collect; at 100 TB this is the standard FAISS
+    train-on-sample pattern with a deterministic sample.  Memoized per
+    (session, sf_dir, n)."""
+
+    def compute():
+        e = _norm_grid(spark, sf_dir)
+        return [
+            [int(x) for x in r.e] for r in e.orderBy("vec_id").limit(n).collect()
+        ]
+
+    return memo("ann_sample", session_key(spark, sf_dir, "id", n), compute)
 
 
 def _int_cosine(pairs):
@@ -463,7 +444,7 @@ def ann_ivf_cosine_md5(spark, sf_dir):
     The corpus pass is one Arrow kernel (exact integer GEMM) + one
     broadcast equi-join on cid — the production plan shape."""
     e = _int_grid(spark, sf_dir)  # session-cached + persisted
-    cmat = _md5_sample_rows(e, 8)
+    cmat = _md5_sample_rows(spark, sf_dir, 8)
 
     def assign_fn(batches):
         import numpy as np
@@ -686,7 +667,7 @@ def ann_pq_adc_md5(spark, sf_dir):
     from pyspark.sql import Window
 
     e = _norm_grid(spark, sf_dir)
-    books = _train_books_int(_id_sample_rows(e, TRAIN_N))
+    books = _train_books_int(_id_sample_rows(spark, sf_dir, TRAIN_N))
 
     def encode_fn(batches):
         import numpy as np
@@ -873,7 +854,7 @@ def ann_ivfpq_adc_md5(spark, sf_dir):
     # coarse quantizer: integer Lloyd over the md5 training sample
     # (seed = its first 8 rows, max-dot assignment ties -> lower cid,
     # floor-mean recenter) — mirrors _coarse_lloyd_ctes op-for-op
-    S = np.asarray(_id_sample_rows(e, TRAIN_N), dtype=np.int64)
+    S = np.asarray(_id_sample_rows(spark, sf_dir, TRAIN_N), dtype=np.int64)
     cmat = S[:KC].copy()
     for _ in range(COARSE_ROUNDS):
         near = np.lexsort(

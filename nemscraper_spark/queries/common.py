@@ -92,11 +92,7 @@ def fan_out(df: DataFrame) -> DataFrame:
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= max(2, target // 2):
         return df
-    out = df.repartition(target)
-    tag = getattr(df, "_sg_table_tag", None)
-    if tag is not None:
-        out._sg_table_tag = tag
-    return out
+    return df.repartition(target)
 
 
 def fan_out_sized(df: DataFrame, n_rows: int, rows_per_task: int = 1000) -> DataFrame:
@@ -186,28 +182,31 @@ def pairwise_cosine9(pairs: DataFrame) -> DataFrame:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver testdata table (TESTDATA.md).
 
-    ``events.ts`` is written as parquet TIMESTAMP(NANOS). Older Spark
-    vectorized readers reject it, so we enable legacy nanosAsLong and
-    convert ns → µs with integer division (ns epochs exceed 2^53, so
-    float math would corrupt them). Spark ≥4.1 instead reads NANOS
-    natively as TIMESTAMP_NTZ (truncated to µs) and ignores the legacy
-    conf — detect which schema we got and normalize to TIMESTAMP_NTZ.
+    The testdata's ``events.ts`` is parquet TIMESTAMP(MICROS) and reads
+    natively as TIMESTAMP_NTZ.  A TIMESTAMP(NANOS) file (pandas'
+    default) is rejected by Spark's parquet reader unless legacy
+    nanosAsLong is on while the schema is resolved; execution does not
+    need it, so the conf is set around the read only and the caller's
+    session is left as it was.  The ns bigint is converted to µs with
+    integer division (ns epochs exceed 2^53, so float math would
+    corrupt them).
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if name != "events":
+        return spark.read.parquet(path)
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
         df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn(
-                "ts",
-                F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
-            )
-    else:
-        df = spark.read.parquet(path)
-    # Provenance tag: certifies "this frame IS the untransformed table"
-    # so shared-lineage caches (the corpus shingle/band cache in
-    # training_data) can key on it. Any select/filter downstream
-    # returns a new DataFrame without the attribute, which disables the
-    # cache rather than ever serving a stale or mismatched frame.
-    df._sg_table_tag = (str(sf_dir), name)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    if dict(df.dtypes)["ts"] == "bigint":
+        df = df.withColumn(
+            "ts",
+            F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
+        )
     return df

@@ -20,6 +20,7 @@ from nemscraper_spark.queries.ann_twins import (
     _int_grid,
     _md5_sample_rows,
 )
+from nemscraper_spark.queries.trunk_cache import session_key
 
 # ------------------------------------------------- semantic dedup --
 
@@ -96,35 +97,17 @@ def semantic_dedup_clusters(spark, sf_dir):
     return semantic_pairs(spark, sf_dir)
 
 
-# SemDeDup trunk memoization (round-10; round-11: moved into the
-# shared trunk_cache registry): the within-cluster verified pair set
-# is identical for both registered consumers
-# (semantic_dedup_clusters returns it verbatim;
-# semantic_dedup_keep_list closes it into components), and its OUTPUT
-# is tiny (one row per cosine>=0.4 pair), so it is built once per
-# (applicationId, sf_dir) and persisted.  Provenance is by
-# construction — semantic_pairs loads the table itself;
-# corpus-immutability contract documented ONCE at trunk_cache
-# (clear_trunk_caches() is the rewrite-boundary hook).
-def clear_semantic_pairs_cache() -> None:
-    """Back-compat alias for trunk_cache.clear_trunk_caches() — one
-    hook now clears every trunk family (round-10 ADVICE)."""
-    from nemscraper_spark.queries.trunk_cache import clear_trunk_caches
-
-    clear_trunk_caches()
-
-
 def semantic_pairs(spark, sf_dir):
     """SemDeDup edge set over the int grid: k(n) md5 centroids ->
     max-dot cluster assignment (Arrow GEMM) -> within-cluster pairs
     with exact-int cosine >= 0.4.  Shared by semantic_dedup_clusters
     and semantic_dedup_keep_list; built once per (session, sf_dir)
     and persisted (see trunk_cache)."""
-    from nemscraper_spark.queries.trunk_cache import norm_dir, trunk
+    from nemscraper_spark.queries.trunk_cache import trunk
 
     return trunk(
         "sem_pairs",
-        (spark.sparkContext.applicationId, norm_dir(sf_dir)),
+        session_key(spark, sf_dir),
         lambda: _semantic_pairs_build(spark, sf_dir),
     )
 
@@ -139,7 +122,7 @@ def _semantic_pairs_build(spark, sf_dir):
     n_docs = footer_row_count(os.path.join(sf_dir, "embeddings.parquet"))
     k = max(8, math.ceil(n_docs / _SEMDEDUP_TARGET))
     e = _int_grid(spark, sf_dir)
-    cmat = _md5_sample_rows(e, k)
+    cmat = _md5_sample_rows(spark, sf_dir, k)
 
     def assign_fn(batches):
         import numpy as np

@@ -32,6 +32,7 @@ from nemscraper_spark.queries.training_data import (
     _shingle_frame,
     lsh_verified_pairs_md5,
 )
+from nemscraper_spark.queries.trunk_cache import session_key
 
 # ------------------------------------------------ triangle density --
 
@@ -87,14 +88,15 @@ def _dup_graph_edges(spark, sf_dir):
     2.4 s for the triangle pipeline; persist_trunk_adaptive lets AQE
     size the cached plan, measured 4.1 s vs 2.0 s warm at 200 raw
     partitions in a foreign driver session.)"""
-    from nemscraper_spark.queries.trunk_cache import norm_dir, trunk
+    from nemscraper_spark.queries.trunk_cache import trunk
 
     d = fan_out(load_table(spark, sf_dir, "documents"))
     return trunk(
         "dup_graph_edges",
-        (spark.sparkContext.applicationId, norm_dir(sf_dir)),
+        session_key(spark, sf_dir),
         lambda: lsh_verified_pairs_md5(
-            d, threshold=0.2, n_perm=16, band_size=4
+            d, threshold=0.2, n_perm=16, band_size=4,
+            key=session_key(spark, sf_dir, "documents"),
         ).select("doc_a", "doc_b"),
     )
 

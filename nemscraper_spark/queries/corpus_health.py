@@ -32,6 +32,7 @@ from nemscraper_spark.queries.training_data import (
     lang_id_heuristic,
     lsh_counted_pairs_md5,
 )
+from nemscraper_spark.queries.trunk_cache import session_key
 
 # ------------------------------------------------------------------ dedup --
 
@@ -527,7 +528,9 @@ def minhash_containment_pairs(spark, sf_dir):
     equi-join count verify, no per-doc shingle arrays), different
     verify measure over the same (n_common, na, nb) counts."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    pairs = lsh_counted_pairs_md5(d)
+    pairs = lsh_counted_pairs_md5(
+        d, key=session_key(spark, sf_dir, "documents")
+    )
     cont = F.col("n_common").cast("double") / F.least(
         F.col("na"), F.col("nb")
     )

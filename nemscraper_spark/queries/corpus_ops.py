@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from nemscraper_spark.operators.components import connected_components
 from nemscraper_spark.queries.common import fan_out, load_table, register
+from nemscraper_spark.queries.trunk_cache import session_key
 
 # word-3-gram shingle set per document — shared by the dup-group edge
 # builder; mirrors training_data.ngram_jaccard_pairs (reference-free op;
@@ -42,33 +43,21 @@ _SHINGLE_SQL = """
 
 
 def _shingles(spark, sf_dir):
-    # Delegates to training_data's session-level shingle cache: the
-    # frame is identical, and routing through one builder lets the
-    # whole dedup family share a single persisted explode. Lazy import
-    # (training_data lazily imports from this module elsewhere).
+    # Delegates to training_data's shingle builder so the whole dedup
+    # family shares one shingle definition. Lazy import (training_data
+    # lazily imports from this module elsewhere).
     from nemscraper_spark.queries.training_data import _shingle_frame
 
     d = fan_out(load_table(spark, sf_dir, "documents"))
     return _shingle_frame(d)
 
 
-# Exact-trunk memoization (round-9 verdict; round-11: moved into the
-# shared trunk_cache registry): the near-dup edge set is identical
-# for both consumers in a session (dedup_cluster_components,
+# Exact-edge trunk: the near-dup edge set is identical for both
+# consumers in a session (dedup_cluster_components,
 # dedup_keep_canonical — the #1 and #4 heaviest suite entries, each
 # rebuilding the full explode→collapse→inverted-index-join trunk),
 # and like the counted-pairs trunk its OUTPUT is tiny (one row per
-# surviving edge).  Provenance is by construction — _dup_edges loads
-# the table itself; corpus-immutability contract documented ONCE at
-# trunk_cache (clear_trunk_caches() is the rewrite-boundary hook).
-def clear_dup_edges_cache() -> None:
-    """Back-compat alias for trunk_cache.clear_trunk_caches() — one
-    hook now clears every trunk family (round-10 ADVICE)."""
-    from nemscraper_spark.queries.trunk_cache import clear_trunk_caches
-
-    clear_trunk_caches()
-
-
+# surviving edge).
 def _dup_edges(spark, sf_dir):
     """Connectivity-equivalent near-dup edge set: exact-duplicate
     collapse first, word-3-gram Jaccard >= 0.5 pairs (inverted-index
@@ -129,13 +118,9 @@ def _dup_edges(spark, sf_dir):
         )
         return near.unionByName(star)
 
-    from nemscraper_spark.queries.trunk_cache import norm_dir, trunk
+    from nemscraper_spark.queries.trunk_cache import trunk
 
-    return trunk(
-        "dup_edges",
-        (spark.sparkContext.applicationId, norm_dir(sf_dir)),
-        build,
-    )
+    return trunk("dup_edges", session_key(spark, sf_dir), build)
 
 
 # recursive-CTE transitive closure over Jaccard>=0.5 3-gram edges,
@@ -267,22 +252,14 @@ def _dedup_groups_md5(spark, sf_dir, n_perm: int, band_size: int):
         F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b")
     )
     reps = mapping.filter(F.col("doc_id") == F.col("rep")).select("doc_id")
-    # Derived provenance tag: the representatives slice is a pure
-    # deterministic function of the documents table (min-doc_id per
-    # md5(text) group — no randomness, no session state), so it may
-    # carry its own cache certificate.  lsh_verified_pairs_md5's
-    # counted-pairs trunk then persists per (session, sf_dir,
-    # "documents#md5reps", geometry) and is shared by every
-    # dedup-groups consumer in the session instead of being rebuilt
-    # per query (round-9 verdict, r10 queue item b).  The tag name is
-    # admitted in training_data._COUNTED_TAGS; the shingle cache
-    # matches "documents" exactly, so this tag never pollutes it.
-    reps_docs = d.join(reps, "doc_id")
-    tag = getattr(d, "_sg_table_tag", None)
-    if tag is not None:
-        reps_docs._sg_table_tag = (tag[0], tag[1] + "#md5reps")
+    # The representatives slice is a pure deterministic function of
+    # the documents table (min-doc_id per md5(text) group), so its
+    # counted-pairs trunk is keyed as its own slice and shared by every
+    # dedup-groups consumer in the session.
     near = lsh_verified_pairs_md5(
-        reps_docs, threshold=0.5, n_perm=n_perm, band_size=band_size
+        d.join(reps, "doc_id"), threshold=0.5, n_perm=n_perm,
+        band_size=band_size,
+        key=session_key(spark, sf_dir, "documents#md5reps"),
     ).select("doc_a", "doc_b")
     comp = connected_components(near.unionByName(star), "doc_a", "doc_b")
     w = Window.partitionBy("component")

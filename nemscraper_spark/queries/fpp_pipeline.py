@@ -112,11 +112,11 @@ def reference_trajectory(spark, sf_dir):
     DECIMAL-accumulated (order-free) and the interpolation arithmetic
     is row-local, so the materialized rows are the bytes the lazy plan
     produced (all four consumers re-verified hash-exact)."""
-    from nemscraper_spark.queries.trunk_cache import norm_dir, trunk
+    from nemscraper_spark.queries.trunk_cache import session_key, trunk
 
     return trunk(
         "fpp_trajectory",
-        (spark.sparkContext.applicationId, norm_dir(sf_dir)),
+        session_key(spark, sf_dir),
         lambda: _reference_trajectory_build(spark, sf_dir),
     )
 

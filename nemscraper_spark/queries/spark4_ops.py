@@ -30,9 +30,6 @@ Spark 4 line and absent from the round-4 registry:
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
 from nemscraper_spark.queries.common import (
@@ -43,6 +40,7 @@ from nemscraper_spark.queries.common import (
     register,
 )
 from nemscraper_spark.queries.streaming_ops import _staged_stream, _state_width
+from nemscraper_spark.queries.trunk_cache import session_key, staged
 
 # ------------------------------------------------------- VARIANT ----
 
@@ -179,12 +177,6 @@ def udtf_ngram_explode(spark, sf_dir):
 
 # -------------------------------------------- state-store reader ----
 
-# The audited checkpoint must outlive the query function: the returned
-# DataFrame reads it lazily when the driver collects.  Keyed by
-# applicationId (a string, never a stopped context) + sf_dir, one
-# bounded drain per session; a few KB of HDFS-state files in tmp.
-_AUDIT_CKPT: dict[tuple[str, str], str] = {}
-
 
 @register(
     "streaming_state_audit",
@@ -212,17 +204,17 @@ def streaming_state_audit(spark, sf_dir):
     like a table (filterable, joinable, aggregatable — it is a real
     DataFrame source with column pruning) instead of instrumenting the
     job.  State is read per shuffle partition in parallel; nothing
-    here collects to the driver.
+    here collects to the driver.  The audited checkpoint outlives the
+    function (the returned frame reads it lazily), so it is staged
+    once per session.
     """
-    key = (spark.sparkContext.applicationId, str(sf_dir))
-    ckpt = _AUDIT_CKPT.get(key)
-    if ckpt is None or not os.path.isdir(ckpt):
+
+    def drain(ckpt):
         stream, _stage = _staged_stream(spark, sf_dir)
         agg = stream.groupBy("event_type").agg(
             F.count("*").alias("n_events"),
             dec_sum("value").alias("sum_value"),
         )
-        ckpt = tempfile.mkdtemp(prefix="nemspark-stateaudit-")
         conf_key = "spark.sql.shuffle.partitions"
         prev = spark.conf.get(conf_key, None)
         spark.conf.set(conf_key, str(_state_width(spark, sf_dir)))
@@ -240,7 +232,8 @@ def streaming_state_audit(spark, sf_dir):
             else:
                 spark.conf.set(conf_key, prev)
         q.awaitTermination()
-        _AUDIT_CKPT[key] = ckpt
+
+    ckpt = staged("state_audit", session_key(spark, sf_dir), drain)
     state = spark.read.format("statestore").load(ckpt)
     # Aggregation state buffers are named by function ("count", "sum"),
     # not by output alias; the decimal sum buffer is widened to

@@ -34,24 +34,17 @@ from nemscraper_spark.queries.common import (
     oracle_dec_sum,
     register,
 )
+from nemscraper_spark.queries.trunk_cache import session_key, staged
 
 
-# The staged source parquet is identical for all four streaming
-# queries in a session (it is just the normalized events table), so it
-# is staged ONCE per (session, sf_dir) and shared — re-staging per
-# query was ~2 s of pure write I/O apiece.  Only checkpoints are
-# per-query.  The stage lives under the system temp dir for the
-# process lifetime (a few MB at driver scale); production streams read
-# the ingest sink's directory directly and never stage at all.
-_STAGE_CACHE: dict[tuple[int, str, str], str] = {}
-
-
-def _staged_stream(spark, sf_dir, name="events"):
-    """Normalize the events table (NANOS ts → TIMESTAMP_NTZ via
-    load_table) and stage it as a parquet directory a file-source
-    stream can read.  Returns (streaming_df, stage_dir) — the stage
-    dir is shared across queries (see _STAGE_CACHE) and must NOT be
-    deleted by the caller.
+def _staged_stream(spark, sf_dir):
+    """Stage the events table as a parquet directory a file-source
+    stream can read.  Returns (streaming_df, stage_dir).  The stage is
+    written once per session and shared by every streaming query
+    (re-staging per query was ~2 s of pure write I/O apiece), so the
+    caller must NOT delete it; only checkpoints are per-query.
+    Production streams read the ingest sink's directory directly and
+    never stage at all.
 
     The driver's testdata is one parquet FILE; Spark's file stream
     source wants a directory it can list for new files — exactly the
@@ -59,13 +52,12 @@ def _staged_stream(spark, sf_dir, name="events"):
     arriving over time), so the stage step is the honest shape, not a
     workaround.
     """
-    ev = load_table(spark, sf_dir, name)
-    key = (id(spark), sf_dir, name)
-    stage = _STAGE_CACHE.get(key)
-    if stage is None or not os.path.isdir(os.path.join(stage, "src")):
-        stage = tempfile.mkdtemp(prefix="nemspark-stream-")
-        ev.write.mode("overwrite").parquet(os.path.join(stage, "src"))
-        _STAGE_CACHE[key] = stage
+    ev = load_table(spark, sf_dir, "events")
+    stage = staged(
+        "stream",
+        session_key(spark, sf_dir),
+        lambda d: ev.write.parquet(os.path.join(d, "src")),
+    )
     stream = spark.readStream.schema(ev.schema).parquet(os.path.join(stage, "src"))
     # Watermarks require TIMESTAMP (instant) — the table carries
     # TIMESTAMP_NTZ.  Track event time on a cast twin (`ts_w`); under a
@@ -98,7 +90,7 @@ def _run_to_memory(result_stream, query_name, output_mode, width=None):
     """Run the stream to completion under Trigger.AvailableNow into a
     memory sink; return the sink table as a DataFrame.  The checkpoint
     is private to this run and removed afterwards; the staged source
-    (shared — see _STAGE_CACHE) is left in place."""
+    (shared — see _staged_stream) is left in place."""
     ckpt = tempfile.mkdtemp(prefix=f"nemspark-ckpt-{query_name}-")
     spark = result_stream.sparkSession
     # Stateful operators key their state store on
@@ -381,12 +373,12 @@ def _staged_flush_stream(spark, sf_dir):
     AvailableNow drain with NoTimeout, a custom sessionizer only emits
     a session when a LATER event arrives — the sentinel closes every
     user's final real session, so the drain's output is the complete
-    batch session set. Shares the _STAGE_CACHE memoization; sentinel
-    rows are filtered back out of the result by their 2099 start."""
+    batch session set. Staged once per session like _staged_stream;
+    sentinel rows are filtered back out of the result by their 2099
+    start."""
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
-    key = (id(spark), sf_dir, "events+flush")
-    stage = _STAGE_CACHE.get(key)
-    if stage is None or not os.path.isdir(os.path.join(stage, "src")):
+
+    def write(stage):
         sentinel = (
             ev.select("user_id")
             .distinct()
@@ -398,11 +390,9 @@ def _staged_flush_stream(spark, sf_dir):
                 F.lit(0.0).alias("value"),
             )
         )
-        stage = tempfile.mkdtemp(prefix="nemspark-stream-flush-")
-        ev.unionByName(sentinel).write.mode("overwrite").parquet(
-            os.path.join(stage, "src")
-        )
-        _STAGE_CACHE[key] = stage
+        ev.unionByName(sentinel).write.parquet(os.path.join(stage, "src"))
+
+    stage = staged("stream_flush", session_key(spark, sf_dir), write)
     schema = "user_id long, ts timestamp_ntz, value double"
     stream = spark.readStream.schema(schema).parquet(os.path.join(stage, "src"))
     return stream.withColumn("ts_w", F.col("ts").cast("timestamp")), stage
@@ -532,11 +522,11 @@ def _staged_outer_join_stream(spark, sf_dir):
     batch evicts the join state — emitting the NULL-padded rows a
     LEFT OUTER stream-stream join may only release once the watermark
     proves no match can still arrive.  Sentinels are filtered back out
-    of the result by user_id.  Shares _STAGE_CACHE memoization."""
+    of the result by user_id.  Staged once per session like
+    _staged_stream."""
     ev = load_table(spark, sf_dir, "events")
-    key = (id(spark), sf_dir, "events+ojoin")
-    stage = _STAGE_CACHE.get(key)
-    if stage is None or not os.path.isdir(os.path.join(stage, "src")):
+
+    def write(stage):
         far = F.lit("2099-01-01 00:00:00").cast("timestamp_ntz")
         sentinel = spark.createDataFrame(
             [(-1, -1, "sentinel", 0.0, None), (-20, -2, "sentinel", 0.0, None)],
@@ -546,13 +536,10 @@ def _staged_outer_join_stream(spark, sf_dir):
             "event_id", far.alias("ts"), "user_id", "event_type",
             "value", "props",
         )
-        stage = tempfile.mkdtemp(prefix="nemspark-stream-ojoin-")
-        ev.unionByName(sentinel).write.mode("overwrite").parquet(
-            os.path.join(stage, "src")
-        )
-        _STAGE_CACHE[key] = stage
-    ev_schema = ev.schema
-    stream = spark.readStream.schema(ev_schema).parquet(
+        ev.unionByName(sentinel).write.parquet(os.path.join(stage, "src"))
+
+    stage = staged("stream_ojoin", session_key(spark, sf_dir), write)
+    stream = spark.readStream.schema(ev.schema).parquet(
         os.path.join(stage, "src")
     )
     return stream.withColumn("ts_w", F.col("ts").cast("timestamp"))
@@ -618,12 +605,6 @@ def streaming_interval_join_outer(spark, sf_dir):
     return out.filter(F.col("user_id") >= 0)
 
 
-# Restart-flow output cache: the restart exercise runs ONCE per
-# (session, sf_dir); repeats return the same sink directory (house
-# staging-cache pattern — the flow, not the re-run, is the subject).
-_RESTART_OUT: dict[tuple[str, str], str] = {}
-
-
 @register(
     "streaming_restart_exactly_once",
     oracle="SELECT event_id, ts, user_id, event_type, value, props FROM events",
@@ -640,12 +621,12 @@ def streaming_restart_exactly_once(spark, sf_dir):
     mid-stream without reconciliation jobs; the dedup/session state
     analogue is pinned by the in-repo restart tests, this entry pins
     the source-offset + file-sink commit-log handshake end to end,
-    hash-exact against SELECT * FROM events."""
-    key = (spark.sparkContext.applicationId, str(sf_dir))
-    out = _RESTART_OUT.get(key)
-    if out is None or not os.path.isdir(out):
+    hash-exact against SELECT * FROM events.  The flow, not the
+    re-run, is the subject, so it runs once per session and repeats
+    read the same sink directory."""
+
+    def write(base):
         ev = load_table(spark, sf_dir, "events")
-        base = tempfile.mkdtemp(prefix="nemspark-restart-")
         landing = os.path.join(base, "landing")
         ckpt = os.path.join(base, "ckpt")
         out = os.path.join(base, "out")
@@ -677,8 +658,9 @@ def streaming_restart_exactly_once(spark, sf_dir):
             q.processAllAvailable()
         finally:
             q.stop()
-        _RESTART_OUT[key] = out
-    return spark.read.parquet(out).select(
+
+    base = staged("restart", session_key(spark, sf_dir), write)
+    return spark.read.parquet(os.path.join(base, "out")).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
 

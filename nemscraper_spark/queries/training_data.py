@@ -29,6 +29,7 @@ from nemscraper_spark.queries.common import (
     pairwise_cosine9,
     register,
 )
+from nemscraper_spark.queries.trunk_cache import session_key
 
 STOPWORDS = {
     "en": ("the", "a", "and", "of", "to"),
@@ -107,12 +108,12 @@ def ngram_jaccard_pairs(spark, sf_dir):
     "exact_pairs"): lsh_band_curve_report consumes the same frame as
     its recall denominator, so the inverted-index join builds once
     per (session, corpus) instead of once per consumer."""
-    from nemscraper_spark.queries.trunk_cache import norm_dir, trunk
+    from nemscraper_spark.queries.trunk_cache import trunk
 
     d = fan_out(load_table(spark, sf_dir, "documents"))
     return trunk(
         "exact_pairs",
-        (spark.sparkContext.applicationId, norm_dir(sf_dir)),
+        session_key(spark, sf_dir),
         lambda: _ngram_jaccard_pairs_build(d),
     )
 
@@ -203,31 +204,23 @@ def _ppjoin_prefix_frame(sh):
     )
 
 
-# PPJoin candidate trunk (round-10; round-11: moved into the shared
-# trunk_cache registry): the prefix+positional candidate set is
+# PPJoin candidate trunk: the prefix+positional candidate set is
 # shared by jaccard_ppjoin_pairs and jaccard_ppjoin_report (which
 # consumes it twice — once directly, once through its call into the
 # pairs query), and its OUTPUT is tiny (the survivor candidate
 # list), while its build pays the df join + per-doc rank window over
-# the full shingle frame.  Provenance by construction (the builder
-# loads the table itself); corpus-immutability contract documented
-# ONCE at trunk_cache, with clear_trunk_caches() the rewrite hook.
+# the full shingle frame.
 def _ppjoin_cand_cached(spark, sf_dir):
     """(doc_a, doc_b, na, nb) PPJoin survivor candidates, memoized +
     persisted per (session, sf_dir, threshold) — see trunk_cache.
     The threshold rationals join the key so a caller (or test) that
     rebinds _PPJOIN_TP/_PPJOIN_TQ can never be served a trunk built
     under a different threshold."""
-    from nemscraper_spark.queries.trunk_cache import norm_dir, trunk
+    from nemscraper_spark.queries.trunk_cache import trunk
 
     return trunk(
         "ppjoin_cand",
-        (
-            spark.sparkContext.applicationId,
-            norm_dir(sf_dir),
-            _PPJOIN_TP,
-            _PPJOIN_TQ,
-        ),
+        session_key(spark, sf_dir, _PPJOIN_TP, _PPJOIN_TQ),
         lambda: _ppjoin_candidates(
             _ppjoin_prefix_frame(_ppjoin_hashed(spark, sf_dir))
         ),
@@ -567,7 +560,9 @@ def minhash_lsh_pairs_md5(spark, sf_dir):
     band bucket join (linear, geometry-controlled), semi-join prune,
     per-pair O(|a|+|b|) set intersect."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    return lsh_verified_pairs_md5(d, threshold=0.2)
+    return lsh_verified_pairs_md5(
+        d, threshold=0.2, key=session_key(spark, sf_dir, "documents")
+    )
 
 
 def _band_curve_block(n_perm: int, band_size: int, threshold: float) -> str:
@@ -640,6 +635,7 @@ def lsh_band_curve_report(spark, sf_dir):
     exact_cnt = ngram_jaccard_pairs(spark, sf_dir).agg(
         F.count("*").alias("exact_pairs")
     )
+    key = session_key(spark, sf_dir, "documents")
     arms = []
     for n_perm, band_size in ((8, 2), (16, 4)):
         # ONE aggregate per arm over the count-form pairs: candidates
@@ -650,7 +646,7 @@ def lsh_band_curve_report(spark, sf_dir):
         # candidate pair shares its argmin shingle and survives the
         # inner count join with n_common >= 1.  The oracle counts
         # cand directly; the two are equal by this invariant.
-        counted = lsh_counted_pairs_md5(d, n_perm, band_size)
+        counted = lsh_counted_pairs_md5(d, n_perm, band_size, key)
         jac = F.col("n_common").cast("double") / (
             F.col("na") + F.col("nb") - F.col("n_common")
         )
@@ -673,46 +669,10 @@ def lsh_band_curve_report(spark, sf_dir):
     return functools.reduce(lambda a, b: a.unionByName(b), arms)
 
 
-# Cross-QUERY stage reuse for the dedup/LSH family: ~8 registered
-# queries each rebuild the identical full-corpus shingle explode (and
-# several the identical 16-way min-agg banding on top). OFF BY DEFAULT:
-# measured at sf0.1 (quiet box, 12-query family suite), the persisted
-# variant ran 47.4 s vs 41.3 s without — at 260k shingle rows the
-# persist barrier + InMemoryTableScan overhead costs more than the
-# recompute it saves, because the explode otherwise fuses into the
-# min-agg under whole-stage codegen (same conclusion as the NOTE in
-# lsh_verified_pairs, now measured cross-query too). At real corpus
-# scale the explode dominates and the trade flips, so the machinery
-# ships behind SPARK_GRAFT_FAMILY_CACHE=1 for cluster deployments.
-# Keys include applicationId (a string, never a stopped context) so a
-# fresh session can never read frames from a dead one; the
-# _sg_table_tag provenance check guarantees the cached frame is
-# bit-equal to what the caller would have built.
-_SHINGLE_CACHE: dict[tuple[str, str], object] = {}
-_BANDS_CACHE: dict[tuple[str, str, int, int], object] = {}
-
-
-def _family_cache_on() -> bool:
-    import os
-
-    return os.environ.get("SPARK_GRAFT_FAMILY_CACHE") == "1"
-
-
 def _shingle_frame(d):
     """(doc_id, text) → exploded distinct word-3-gram rows — the
-    Spark twin of _SHINGLE_SQL, shared by every md5-LSH pipeline.
-    With SPARK_GRAFT_FAMILY_CACHE=1 and ``d`` carrying the load_table
-    provenance tag for the documents table, the result is persisted
-    and reused across every query in the session touching the same
-    (sf_dir) corpus (see the cache-default note above)."""
-    tag = getattr(d, "_sg_table_tag", None)
-    key = None
-    if tag is not None and tag[1] == "documents" and _family_cache_on():
-        key = (d.sparkSession.sparkContext.applicationId, tag[0])
-        hit = _SHINGLE_CACHE.get(key)
-        if hit is not None:
-            return hit
-    sh = (
+    Spark twin of _SHINGLE_SQL, shared by every md5-LSH pipeline."""
+    return (
         d.withColumn("w", F.split("text", " "))
         .filter(F.size("w") >= 3)
         .select(
@@ -725,34 +685,20 @@ def _shingle_frame(d):
             ).alias("shingle"),
         )
     )
-    if key is not None:
-        sh = sh.persist()
-        sh._sg_shingle_key = key
-        _SHINGLE_CACHE[key] = sh
-    return sh
 
 
 def _md5_bands_frame(sh, n_perm: int, band_size: int):
     """Shingle rows → (doc_id, band, bucket) band rows at the given
     geometry — the Spark twin of _lsh_md5_bands_only_sql, shared by
     _md5_band_candidates and dedup_incremental_delta so a geometry
-    or shingle fix lands everywhere at once. Cached per
-    (session, sf_dir, geometry) when ``sh`` came out of the shingle
-    cache (opt-in, see the cache-default note above)."""
-    skey = getattr(sh, "_sg_shingle_key", None)
-    key = None
-    if skey is not None:
-        key = (*skey, n_perm, band_size)
-        hit = _BANDS_CACHE.get(key)
-        if hit is not None:
-            return hit
+    or shingle fix lands everywhere at once."""
     mins = sh.groupBy("doc_id").agg(
         *[
             F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")))).alias(f"s{i}")
             for i in range(n_perm)
         ]
     )
-    bands = mins.select(
+    return mins.select(
         "doc_id",
         F.explode(
             F.array(
@@ -771,10 +717,6 @@ def _md5_bands_frame(sh, n_perm: int, band_size: int):
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bucket")
-    if key is not None:
-        bands = bands.persist()
-        _BANDS_CACHE[key] = bands
-    return bands
 
 
 def _md5_band_candidates(sh, n_perm: int, band_size: int):
@@ -793,48 +735,7 @@ def _md5_band_candidates(sh, n_perm: int, band_size: int):
     )
 
 
-# Counted-pairs trunk memoization (round-11: moved into the shared
-# trunk_cache registry): the (doc_a, doc_b, n_common, na, nb) frame
-# at a given band geometry is identical for every consumer in a
-# session — at (16, 4) four registered queries rebuild it
-# (minhash_lsh_pairs, dup_triangle_density, dup_graph_core_peel, the
-# band-curve arm) and at (8, 2) three more — so it is built ONCE per
-# (applicationId, sf_dir, geometry) and persisted.  Unlike the
-# shingle/band frames (large, codegen-fused, cached only behind
-# SPARK_GRAFT_FAMILY_CACHE — see the note above _SHINGLE_CACHE), the
-# counted frame is the trunk's tiny OUTPUT (one row per band-bucket
-# candidate pair), so the persist barrier is near-free and each reuse
-# saves the whole explode→min-agg→bucket-join→count-join trunk — the
-# same trade that cut the ANN family ~65% (_GRID_CACHE).  Keyed by
-# the provenance tag — either load_table's raw "documents" tag or a
-# DERIVED tag a builder attaches to a slice it can prove is a pure
-# deterministic function of the table (the dedup-groups md5-collapse
-# representatives carry "documents#md5reps" — see
-# corpus_ops._dedup_groups_md5); any other transformed frame carries
-# no tag and bypasses the cache rather than ever serving a mismatched
-# frame.  Corpus-immutability contract documented ONCE at
-# trunk_cache; clear_trunk_caches() is the rewrite-boundary hook.
-
-# Tag names lsh_counted_pairs_md5 accepts as cache-key provenance:
-# the raw table, plus slices a builder certifies as deterministic
-# functions of it (frozenset => participates in fingerprints, so
-# admitting a new tag is a behavior change that invalidates the
-# family, as it must).
-_COUNTED_TAGS = frozenset({"documents", "documents#md5reps"})
-
-
-def clear_counted_cache() -> None:
-    """Back-compat alias for trunk_cache.clear_trunk_caches(): clears
-    EVERY trunk family (counted-pairs, ppjoin candidates, near-dup
-    edges, SemDeDup pairs) plus the opt-in shingle-family frames —
-    the round-10 ADVICE fix for the per-module hooks that each left
-    the other modules' caches alive."""
-    from nemscraper_spark.queries.trunk_cache import clear_trunk_caches
-
-    clear_trunk_caches()
-
-
-def lsh_counted_pairs_md5(d, n_perm: int = 8, band_size: int = 2):
+def lsh_counted_pairs_md5(d, n_perm: int = 8, band_size: int = 2, key=None):
     """Shared md5-LSH verify machinery over a (doc_id, text) frame:
     band-bucket candidates joined back to the shingle table on equal
     shingle STRINGS (collision-free by construction, exactly as the
@@ -853,10 +754,13 @@ def lsh_counted_pairs_md5(d, n_perm: int = 8, band_size: int = 2):
     collision means equal min-md5 within the band, so the pair shares
     its argmin shingle and n_common >= 1 always.
 
-    Memoized + persisted per (session, sf_dir, tagged-slice,
-    geometry) when ``d`` carries a certified provenance tag — the raw
-    documents table or the dedup-groups md5-collapse representatives
-    slice (see trunk_cache / _COUNTED_TAGS)."""
+    The frame is identical for every consumer at a geometry (four
+    registered queries at (16, 4), three at (8, 2)) and tiny, so a
+    caller whose ``d`` is a pure function of a corpus table passes
+    ``key = session_key(spark, sf_dir, slice_name)`` naming that slice
+    ("documents", or "documents#md5reps" for the dedup-groups
+    representatives) and the result is a persisted trunk per
+    (key, geometry).  With no key the frame is built uncached."""
     def build():
         sh = _shingle_frame(d)
         cand = _md5_band_candidates(sh, n_perm, band_size)
@@ -873,25 +777,16 @@ def lsh_counted_pairs_md5(d, n_perm: int = 8, band_size: int = 2):
         cb = cnt.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
         return inter.join(ca, "doc_a").join(cb, "doc_b")
 
-    tag = getattr(d, "_sg_table_tag", None)
-    if tag is None or tag[1] not in _COUNTED_TAGS:
-        return build()  # no provenance certificate -> never cache
-    from nemscraper_spark.queries.trunk_cache import norm_dir, trunk
+    if key is None:
+        return build()
+    from nemscraper_spark.queries.trunk_cache import trunk
 
-    return trunk(
-        "counted",
-        (
-            d.sparkSession.sparkContext.applicationId,
-            norm_dir(tag[0]),
-            tag[1],
-            n_perm,
-            band_size,
-        ),
-        build,
-    )
+    return trunk("counted", (*key, n_perm, band_size), build)
 
 
-def lsh_verified_pairs_md5(d, threshold: float, n_perm: int = 8, band_size: int = 2):
+def lsh_verified_pairs_md5(
+    d, threshold: float, n_perm: int = 8, band_size: int = 2, key=None
+):
     """The md5 (oracle-portable) LSH pipeline over a (doc_id, text)
     frame: md5-LSH band candidates → exact-Jaccard verify ≥ threshold
     in the ORACLE'S OWN shape — candidates joined back to the shingle
@@ -917,7 +812,7 @@ def lsh_verified_pairs_md5(d, threshold: float, n_perm: int = 8, band_size: int 
         F.col("na") + F.col("nb") - F.col("n_common")
     )
     return (
-        lsh_counted_pairs_md5(d, n_perm, band_size)
+        lsh_counted_pairs_md5(d, n_perm, band_size, key)
         .filter(jac >= threshold)
         .select(
             "doc_a",
@@ -949,7 +844,10 @@ def minhash_lsh_pairs(spark, sf_dir):
     recall/subset pins in tests/test_training_ops.py.
     """
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    return lsh_verified_pairs_md5(d, threshold=0.2, n_perm=16, band_size=4)
+    return lsh_verified_pairs_md5(
+        d, threshold=0.2, n_perm=16, band_size=4,
+        key=session_key(spark, sf_dir, "documents"),
+    )
 
 
 # The "new batch": a deterministic 20% slice of the corpus standing in
@@ -1022,7 +920,9 @@ def dedup_incremental_delta(spark, sf_dir):
     # sides changes nothing.  Verified hash-exact vs the unchanged
     # DuckDB oracle.  At scale the trunk IS the persisted band index a
     # nightly deployment reads — O(delta + collisions) per ingest.
-    counted = lsh_counted_pairs_md5(d, n_perm=16, band_size=4)
+    counted = lsh_counted_pairs_md5(
+        d, n_perm=16, band_size=4, key=session_key(spark, sf_dir, "documents")
+    )
     a_delta = F.col("doc_a") % 5 == 4
     b_delta = F.col("doc_b") % 5 == 4
     doc_new = F.when(b_delta, F.col("doc_b")).otherwise(F.col("doc_a"))

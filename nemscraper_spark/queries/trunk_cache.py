@@ -1,55 +1,66 @@
-"""ONE registry for every memoized-and-persisted trunk frame.
+"""The one registry for every session cache of the query engine.
 
-Round-11 consolidation of the four parallel cache dicts that grew
-over rounds 8-10 (training_data._COUNTED_CACHE / _PPJOIN_CAND_CACHE,
-corpus_ops._DUP_EDGES_CACHE, corpus_extra._SEM_PAIRS_CACHE — the
-round-10 verdict: "the next trunk cache should be a generalization,
-not a fifth copy").  A *trunk* is a shared sub-plan whose OUTPUT is
-tiny (candidate pairs, near-dup edges, SemDeDup pairs) while its
-build pays the family's full explode/join/window cost, so building
-it once per session and persisting MEMORY_AND_DISK is near-free and
-every extra consumer saves the whole trunk — the trade measured for
-the ANN grid cache (~65%) and the dedup family (BENCH_r10: second
-consumer 6.5 s -> ~1.4 s).
+Every memoized intermediate lives in ``_TRUNKS`` under the key
+``(family, applicationId, norm_dir(sf_dir), *tunables)``; callers
+build everything after the family with ``session_key``.  An entry is
+one of three kinds:
 
-CORPUS-IMMUTABILITY CONTRACT (the single copy — the per-family
-builders cite this): cache keys carry the family name, the Spark
-applicationId, the canonicalized corpus directory, and every
-behavior tunable that shaped the trunk (band geometry, threshold
-rationals, provenance slice tag) — but NO file footprint.  A cached
-trunk is therefore only correct while the parquet files under its
-directory are immutable for the lifetime of the Spark application.
-That is the driver-testdata contract (TESTDATA.md: tables are
-generated once, read-only) and the same assumption every persisted
-Spark frame already makes about its source files.  A pipeline that
-rewrites its corpus in-session must call clear_trunk_caches() at the
-rewrite boundary — ONE hook, covering every family (the round-10
-ADVICE gap: the old per-module hooks each cleared only their own
-dict, so a caller following any one doc got silently stale results
-from the others).  Keys include applicationId (a string, never a
-stopped context) so a fresh session can never read frames from a
-dead one.  Entries are pinned for the session lifetime unless the
-hook runs — bounded: one tiny trunk per (family, corpus, tunables)
-actually queried.
+- a persisted frame (``trunk``): a shared sub-plan whose OUTPUT is
+  small (candidate pairs, near-dup edges, ANN grids) while its build
+  pays the family's full explode/join/window cost, so it is built
+  once per session, persisted MEMORY_AND_DISK and read by every
+  consumer (BENCH_r10: second dedup consumer 6.5 s -> ~1.4 s);
+- a staged directory (``staged``): a temp directory written once per
+  session and read lazily by the returned frame (stream sources,
+  streaming checkpoints, format round-trips);
+- a small driver-side value (``memo``): a bounded collect such as an
+  ANN training sample.
+
+Corpus-immutability contract: keys carry the family, the Spark
+applicationId (a string, never a stopped context, so a fresh session
+never reads a dead one's entries), the canonical corpus directory and
+every tunable that shaped the entry, but NO file footprint.  An entry
+is therefore only correct while the parquet files under its directory
+are immutable for the lifetime of the Spark application — the
+testdata contract (TESTDATA.md) and the assumption every
+persisted Spark frame already makes about its source files.  A
+pipeline that rewrites its corpus in-session must call
+``clear_trunk_caches()`` at the rewrite boundary: it unpersists every
+frame, deletes every staged directory and drops every value.  A
+DataFrame returned before that call may read those frames and
+directories lazily, so it must not be collected after it.  Without
+the call entries live for the session: one per (family, corpus,
+tunables) actually queried.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
+from pathlib import Path
 
 # family-keyed registry; an EMPTY module-level dict (runtime cache)
 # is deliberately outside the fingerprint walk — see
-# __spark_entry__._is_plain_const.
+# __spark_entry__._is_plain_const.  Staged directories are stored as
+# Path objects, never plain strings, so a registry holding only
+# directories still reads as a runtime cache there.
 _TRUNKS: dict[tuple, object] = {}
 
 
 def norm_dir(sf_dir) -> str:
     """Canonical cache-key form of a corpus directory: absolute +
     normalized, so two spellings of the same directory (trailing
-    slash, relative vs absolute) share one persisted trunk instead of
-    building and pinning duplicates (round-10 ADVICE)."""
+    slash, relative vs absolute) share one entry instead of building
+    and pinning duplicates."""
     return os.path.normpath(os.path.abspath(str(sf_dir)))
+
+
+def session_key(spark, sf_dir, *tunables) -> tuple:
+    """The key every entry carries after its family name:
+    (applicationId, norm_dir(sf_dir), *tunables)."""
+    return (spark.sparkContext.applicationId, norm_dir(sf_dir), *tunables)
 
 
 def persist_trunk_adaptive(out):
@@ -64,13 +75,12 @@ def persist_trunk_adaptive(out):
     steady-state on dup_graph_core_peel's iterative rounds).  The
     conf is read when the cache entry is registered/compiled, so it
     is set around persist() + an eager materialization and then
-    restored — the round-9 ADVICE fix for the old set-and-forget.
-    The eager count() moves the trunk build from the first consumer
-    into the builder (same total work, one extra tiny job) and
-    guarantees the cached data is laid out while the conf is in
-    force.  If that materialization RAISES, the frame is unpersisted
-    before re-raising so a failed build never leaves an orphaned
-    persisted plan that no clear hook can reach (round-10 ADVICE)."""
+    restored.  The eager count() moves the trunk build from the
+    first consumer into the builder (same total work, one extra tiny
+    job) and guarantees the cached data is laid out while the conf
+    is in force.  If that materialization RAISES, the frame is
+    unpersisted before re-raising so a failed build never leaves an
+    orphaned persisted plan that no clear hook can reach."""
     from pyspark import StorageLevel
 
     conf = out.sparkSession.conf
@@ -96,11 +106,9 @@ def persist_trunk_adaptive(out):
 
 
 def trunk(family: str, key: tuple, build: Callable[[], object]):
-    """Return the session's persisted trunk for (family, *key),
-    building + persisting it on first request.  ``key`` must carry
-    the applicationId, the norm_dir()-canonical corpus directory,
-    and every tunable the build depends on (see the module contract
-    above); ``build`` is only invoked on a miss."""
+    """Return the session's persisted frame for (family, *key),
+    building + persisting it on first request.  ``key`` is a
+    session_key(); ``build`` is only invoked on a miss."""
     k = (family, *key)
     hit = _TRUNKS.get(k)
     if hit is not None:
@@ -110,31 +118,45 @@ def trunk(family: str, key: tuple, build: Callable[[], object]):
     return out
 
 
-def clear_trunk_caches() -> None:
-    """THE rewrite-boundary / teardown hook: unpersist and drop every
-    memoized trunk in every family — counted-pairs, ppjoin
-    candidates, near-dup edges, SemDeDup pairs, dup-graph edges —
-    plus the opt-in shingle/band family frames
-    (SPARK_GRAFT_FAMILY_CACHE) and the ANN grid/sample caches
-    (ann_twins), so a session that rewrites its corpus files in
-    place can never be served a stale frame from ANY registry
-    (round-10 ADVICE: the per-module hooks left the other modules'
-    caches alive — the ANN grid had the same staleness hazard with
-    no hook at all)."""
-    from nemscraper_spark.queries.ann_twins import (
-        _GRID_CACHE,
-        _SAMPLE_CACHE,
-    )
-    from nemscraper_spark.queries.training_data import (
-        _BANDS_CACHE,
-        _SHINGLE_CACHE,
-    )
+def staged(family: str, key: tuple, write: Callable[[str], None]) -> str:
+    """Return the session's staged directory for (family, *key).  On
+    first request (or if the directory has gone) a fresh temp
+    directory is created and ``write(dir)`` fills it.  If ``write``
+    raises, the half-written directory is removed and nothing is
+    registered."""
+    k = (family, *key)
+    hit = _TRUNKS.get(k)
+    if hit is not None and hit.is_dir():
+        return str(hit)
+    path = Path(tempfile.mkdtemp(prefix=f"nemspark-{family}-"))
+    try:
+        write(str(path))
+    except BaseException:
+        shutil.rmtree(path, ignore_errors=True)
+        raise
+    _TRUNKS[k] = path
+    return str(path)
 
-    _SAMPLE_CACHE.clear()  # plain lists — nothing persisted to release
-    for cache in (_TRUNKS, _SHINGLE_CACHE, _BANDS_CACHE, _GRID_CACHE):
-        while cache:
-            _, frame = cache.popitem()
+
+def memo(family: str, key: tuple, compute: Callable[[], object]):
+    """Return the session's small driver-side value for (family,
+    *key), computing it on first request."""
+    k = (family, *key)
+    if k not in _TRUNKS:
+        _TRUNKS[k] = compute()
+    return _TRUNKS[k]
+
+
+def clear_trunk_caches() -> None:
+    """THE rewrite-boundary / teardown hook: unpersist every frame,
+    delete every staged directory and drop every value, in every
+    family (see the module contract above)."""
+    while _TRUNKS:
+        _, entry = _TRUNKS.popitem()
+        if isinstance(entry, Path):
+            shutil.rmtree(entry, ignore_errors=True)
+        elif hasattr(entry, "unpersist"):
             try:
-                frame.unpersist()
+                entry.unpersist()
             except Exception:
                 pass  # session already stopped — nothing to release

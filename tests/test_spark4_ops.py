@@ -93,15 +93,16 @@ def test_state_audit_equals_batch_and_reuses_checkpoint(spark, sf_dir):
         .collect()
     }
     assert first == batch
-    from nemscraper_spark.queries.spark4_ops import _AUDIT_CKPT
+    import nemscraper_spark.queries.trunk_cache as tc
 
-    n_ckpts = len(_AUDIT_CKPT)
+    key = ("state_audit", *tc.session_key(spark, sf_dir))
+    ckpt = tc._TRUNKS[key]
     second = {
         r.event_type: (r.n_events, r.sum_value)
         for r in fn(spark, sf_dir).collect()
     }
     assert second == first
-    assert len(_AUDIT_CKPT) == n_ckpts  # cache hit, no new drain
+    assert tc._TRUNKS[key] == ckpt  # cache hit, no new drain
 
 
 def test_cross_dup_fraction_independent_recompute(spark, sf_dir):
@@ -257,11 +258,11 @@ def test_format_roundtrip_rows_identical_and_stage_cached(spark, sf_dir):
     second invocation must reuse the staged directories."""
     import os
 
-    from nemscraper_spark.queries.ingest_ops import _FMT_STAGE
+    import nemscraper_spark.queries.trunk_cache as tc
 
     REGISTRY["format_roundtrip_matrix"].fn(spark, sf_dir).collect()
-    key = (spark.sparkContext.applicationId, str(sf_dir))
-    stage = _FMT_STAGE[key]
+    key = ("fmt", *tc.session_key(spark, sf_dir))
+    stage = str(tc._TRUNKS[key])
     src = sorted(
         map(
             tuple,
@@ -282,4 +283,72 @@ def test_format_roundtrip_rows_identical_and_stage_cached(spark, sf_dir):
         got = sorted(map(tuple, df.collect()))
         assert got == src, f"{fmt} round trip diverged"
     REGISTRY["format_roundtrip_matrix"].fn(spark, sf_dir).collect()
-    assert _FMT_STAGE[key] == stage  # cache hit, no restage
+    assert str(tc._TRUNKS[key]) == stage  # cache hit, no restage
+
+
+def test_clear_hook_deletes_staged_dirs_and_rerun_matches(spark, sf_dir):
+    """clear_trunk_caches() deletes the staged directories of
+    format_roundtrip_matrix and a streaming query from disk (they used
+    to stay for the whole process), and a re-run restages them and
+    returns the same rows."""
+    import os
+
+    import nemscraper_spark.queries.trunk_cache as tc
+
+    names = ("format_roundtrip_matrix", "streaming_window_counts")
+    keys = [
+        ("fmt", *tc.session_key(spark, sf_dir)),
+        ("stream", *tc.session_key(spark, sf_dir)),
+    ]
+    first = {
+        n: sorted(map(tuple, REGISTRY[n].fn(spark, sf_dir).collect()))
+        for n in names
+    }
+    dirs = [tc._TRUNKS[k] for k in keys]
+    assert all(d.is_dir() for d in dirs)
+    tc.clear_trunk_caches()
+    assert not any(os.path.exists(d) for d in dirs)
+    assert not tc._TRUNKS
+    try:
+        again = {
+            n: sorted(map(tuple, REGISTRY[n].fn(spark, sf_dir).collect()))
+            for n in names
+        }
+        assert again == first
+        assert all(tc._TRUNKS[k].is_dir() for k in keys)
+        assert [tc._TRUNKS[k] for k in keys] != dirs  # restaged
+    finally:
+        tc.clear_trunk_caches()
+
+
+def test_load_table_leaves_conf_and_reads_ntz(spark, sf_dir, tmp_path):
+    """load_table changes nothing in the caller's session conf and
+    returns events.ts as TIMESTAMP_NTZ — for the testdata's
+    TIMESTAMP(MICROS) table and for a pandas-written TIMESTAMP(NANOS)
+    file alike, whose sub-µs digits are truncated."""
+    import datetime
+
+    import pandas as pd
+
+    pd.DataFrame(
+        {
+            "event_id": [1, 2],
+            "ts": pd.to_datetime(
+                ["2024-01-01 10:00:00", "2024-02-01 10:00:00.123456789"],
+                format="ISO8601",
+            ),
+        }
+    ).to_parquet(tmp_path / "events.parquet")
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    before = dict(spark.conf.getAll)
+    ev = load_table(spark, sf_dir, "events")
+    nanos = load_table(spark, str(tmp_path), "events")
+    assert dict(spark.conf.getAll) == before
+    assert dict(ev.dtypes)["ts"] == "timestamp_ntz"
+    assert dict(nanos.dtypes)["ts"] == "timestamp_ntz"
+    assert ev.count() > 0
+    assert sorted(r.ts for r in nanos.collect()) == [
+        datetime.datetime(2024, 1, 1, 10, 0),
+        datetime.datetime(2024, 2, 1, 10, 0, 0, 123456),
+    ]
+    assert dict(spark.conf.getAll) == before

@@ -408,18 +408,18 @@ def test_verify_matches_collectset_reference(spark, sf_dir_oracle):
 
 
 def test_counted_pairs_cache_provenance(spark, sf_dir_oracle):
-    """The round-9 counted-pairs memoization must only ever serve a
-    frame it can PROVE matches what the caller would have built:
-    (a) same tagged documents frame + same geometry -> the identical
-    cached object; (b) a different geometry is a different key;
-    (c) an untransformed-tag-less frame (any select/filter downstream
-    of load_table) BYPASSES the cache entirely — and still computes
-    the same rows."""
+    """The counted-pairs memoization is keyed by the caller, who names
+    the corpus slice its frame was built from:
+    (a) same key + same geometry -> the identical cached object;
+    (b) a different geometry is a different key;
+    (c) a call with no key BYPASSES the cache entirely — and still
+    computes the same rows."""
     import nemscraper_spark.queries.training_data as td
     import nemscraper_spark.queries.trunk_cache as tc
     from nemscraper_spark.queries.common import fan_out, load_table
 
     d = fan_out(load_table(spark, sf_dir_oracle, "documents"))
+    key = tc.session_key(spark, sf_dir_oracle, "documents")
     app = spark.sparkContext.applicationId
     nd = tc.norm_dir(sf_dir_oracle)
     keys = [
@@ -428,21 +428,18 @@ def test_counted_pairs_cache_provenance(spark, sf_dir_oracle):
     ]
     saved = {k: tc._TRUNKS.pop(k, None) for k in keys}
     try:
-        a1 = td.lsh_counted_pairs_md5(d, 8, 2)
-        a2 = td.lsh_counted_pairs_md5(d, 8, 2)
+        a1 = td.lsh_counted_pairs_md5(d, 8, 2, key)
+        a2 = td.lsh_counted_pairs_md5(d, 8, 2, key)
         assert a1 is a2  # cache hit on (session, sf_dir, geometry)
-        b = td.lsh_counted_pairs_md5(d, 16, 4)
+        b = td.lsh_counted_pairs_md5(d, 16, 4, key)
         assert b is not a1  # geometry is part of the key
         assert keys[0] in tc._TRUNKS
         assert keys[1] in tc._TRUNKS
 
-        # tag-less frame: bit-identical projection of the same table,
-        # but the provenance certificate is gone -> bypass, no new key
+        # no key: the same frame is built uncached, no new entry
         n_keys = len(tc._TRUNKS)
-        d2 = d.select("doc_id", "text")
-        assert getattr(d2, "_sg_table_tag", None) is None
-        c1 = td.lsh_counted_pairs_md5(d2, 8, 2)
-        c2 = td.lsh_counted_pairs_md5(d2, 8, 2)
+        c1 = td.lsh_counted_pairs_md5(d, 8, 2)
+        c2 = td.lsh_counted_pairs_md5(d, 8, 2)
         assert c1 is not c2
         assert len(tc._TRUNKS) == n_keys
         assert sorted(map(tuple, c1.collect())) == sorted(
@@ -581,12 +578,12 @@ def test_persist_trunk_adaptive_restores_session_conf(spark, sf_dir):
 
 
 def test_dedup_groups_reps_slice_uses_derived_tag_cache(spark, sf_dir_oracle):
-    """r10 queue item b: the dedup-groups md5-collapse representatives
-    slice carries the derived "documents#md5reps" provenance tag, so
-    its counted-pairs trunk persists under its own key — distinct from
-    the raw-table key at the same geometry — and a repeat build at the
-    same geometry is a cache hit, while rows are unchanged vs the
-    pre-tag (bypass) behavior."""
+    """The dedup-groups md5-collapse representatives slice is keyed as
+    its own "documents#md5reps" slice, so its counted-pairs trunk
+    persists under its own key — distinct from the raw-table key at
+    the same geometry — and a repeat build at the same geometry is a
+    cache hit, while rows are unchanged vs the uncached (no key)
+    build."""
     import nemscraper_spark.queries.training_data as td
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
@@ -604,14 +601,14 @@ def test_dedup_groups_reps_slice_uses_derived_tag_cache(spark, sf_dir_oracle):
         got = sorted(
             map(tuple, _dedup_groups_md5(spark, sf_dir_oracle, 8, 2).collect())
         )
-        assert rkey in tc._TRUNKS  # trunk registered under derived tag
+        assert rkey in tc._TRUNKS  # trunk registered under the slice key
         trunk = tc._TRUNKS[rkey]
         # rebuild: same session + sf_dir + geometry -> identical object
         _dedup_groups_md5(spark, sf_dir_oracle, 8, 2)
         assert tc._TRUNKS[rkey] is trunk
-        # the derived tag never collides with the raw-table key
+        # the slice key never collides with the raw-table key
         assert ("counted", app, tc.norm_dir(sf_dir_oracle), "documents", 8, 2) != rkey
-        # rows match the bypass path (tag stripped -> cache-less build)
+        # rows match the bypass path (no key -> cache-less build)
         d = fan_out(load_table(spark, sf_dir_oracle, "documents"))
         mapping = (
             d.select("doc_id", F.md5("text").alias("th"))
@@ -655,14 +652,14 @@ def test_dedup_groups_reps_slice_uses_derived_tag_cache(spark, sf_dir_oracle):
 
 
 def test_clear_hooks_empty_every_trunk_cache(spark, sf_dir):
-    """THE rewrite-boundary hook (r11: ONE registry, one hook) must
-    unpersist + empty every trunk family at once — the r10 ADVICE
-    gap was per-module hooks leaving sibling caches alive — and a
-    post-clear rebuild yields the same rows.  The legacy per-module
-    hook names must reach the same aggregate clear.  Teardown clears
-    again so the test leaves the registry in a known-empty state
-    rather than pinning freshly built trunks for the session (r10
-    ADVICE)."""
+    """THE rewrite-boundary hook (ONE registry, one hook) must
+    unpersist + empty every family at once — persisted trunks, ANN
+    grids and training samples alike — and a post-clear rebuild
+    yields the same rows.  Teardown clears again so the test leaves
+    the registry in a known-empty state rather than pinning freshly
+    built trunks for the session."""
+    from pyspark import StorageLevel
+
     import nemscraper_spark.queries.trunk_cache as tc
     import nemscraper_spark.queries.training_data as td
     from nemscraper_spark.queries import REGISTRY
@@ -680,19 +677,20 @@ def test_clear_hooks_empty_every_trunk_cache(spark, sf_dir):
         assert ("ppjoin_cand", app, nd, td._PPJOIN_TP, td._PPJOIN_TQ) in tc._TRUNKS
         assert ("sem_pairs", app, nd) in tc._TRUNKS
 
-        # the LEGACY hook name reaches the aggregate clear: counted,
-        # ppjoin, dup-edges AND sem-pairs all drop in one call
-        # warm an ANN grid entry too: the aggregate hook covers it
-        # (same corpus-staleness hazard, previously no hook at all)
+        # warm an ANN grid and a training sample too: the one hook
+        # covers them (same corpus-staleness hazard)
         import nemscraper_spark.queries.ann_twins as at
 
-        at._int_grid(spark, sf_dir)
-        assert at._GRID_CACHE
+        grid = at._int_grid(spark, sf_dir)
+        at._md5_sample_rows(spark, sf_dir, 8)
+        assert ("ann_grid", app, nd, "int") in tc._TRUNKS
+        assert ("ann_sample", app, nd, "md5", 8) in tc._TRUNKS
+        frames = [v for v in tc._TRUNKS.values() if hasattr(v, "unpersist")]
+        assert any(f is grid for f in frames)
 
-        td.clear_counted_cache()
+        tc.clear_trunk_caches()
         assert not tc._TRUNKS
-        assert not td._SHINGLE_CACHE and not td._BANDS_CACHE
-        assert not at._GRID_CACHE and not at._SAMPLE_CACHE
+        assert all(f.storageLevel == StorageLevel.NONE for f in frames)
 
         # rebuild after clear: identical rows (the hook never corrupts)
         assert pp_rows == sorted(
@@ -730,6 +728,31 @@ def test_failed_trunk_materialization_leaves_no_orphan(spark):
     # persist() returned the same frame; the except-path unpersisted it
     assert bad.storageLevel == StorageLevel.NONE
     assert spark.conf.get(name, None) == prev
+
+
+def test_failed_staging_leaves_no_orphan():
+    """Twin of the trunk test above for staged directories: if the
+    writer raises, the half-written directory is removed before the
+    error surfaces and staged() registers nothing."""
+    import os
+
+    import pytest
+
+    import nemscraper_spark.queries.trunk_cache as tc
+
+    made = []
+
+    def write(d):
+        made.append(d)
+        with open(os.path.join(d, "part-0"), "w") as f:
+            f.write("half")
+        raise RuntimeError("write failed")
+
+    key = ("__app__", "__orphan_test__")
+    with pytest.raises(RuntimeError):
+        tc.staged("test_fail", key, write)
+    assert len(made) == 1 and not os.path.exists(made[0])
+    assert ("test_fail", *key) not in tc._TRUNKS
 
 
 def test_norm_dir_canonicalizes_spellings(tmp_path):
