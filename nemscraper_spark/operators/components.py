@@ -17,8 +17,15 @@ min-label propagation needs diameter rounds — a 1000-hop near-dup chain
 Scale notes (100 TB corpus → billions of edges):
   * every step is groupBy/join on the node id — hash-partitioned
     shuffles that AQE coalesces; no driver-side graph state, ever.
-  * convergence check collects ONE row per round (count + checksum),
-    the treeAggregate pattern; rounds are bounded by `max_rounds`.
+  * convergence check collects ONE row per round: the round stops the
+    loop as soon as its edges form a STAR FOREST — no node is both a
+    source and a target, and no source has more than one out-edge.
+    Every edge points from the larger node to the smaller and the
+    contraction preserves connectivity, so each star's center is then
+    its component's minimum and the stars ARE the labelling; a star
+    forest is also a fixed point of both stars, so no confirming round
+    is needed.  Rounds are bounded by `max_rounds`; reaching the cap
+    before a star forest raises instead of returning partial stars.
   * each round's output is `localCheckpoint`ed to sever the lineage —
     without it round N's plan re-executes rounds 1..N-1 (exponential
     blowup), the classic iterative-DataFrame trap.
@@ -66,7 +73,7 @@ def connected_components(
     edges: DataFrame,
     src: str = "u",
     dst: str = "v",
-    max_rounds: int = 12,
+    max_rounds: int = 64,
     stats: dict | None = None,
 ) -> DataFrame:
     """Edge list -> (node long, component long) with component = min node
@@ -76,6 +83,7 @@ def connected_components(
     Pass ``stats={}`` to receive {"rounds": <star rounds executed>,
     "edges": <per-round edge counts>} — the observable that confirms the
     O(log n) bound at scale (scripts/cc_depth_probe.py records it).
+    Raises RuntimeError if `max_rounds` rounds end without a star forest.
     """
     spark = edges.sparkSession
 
@@ -111,7 +119,7 @@ def connected_components(
     )
     # the CURRENT round's checkpoint id — each round's blocks are freed
     # as soon as the next round's are materialized. Without this a
-    # long-lived session (or a 12-round run over billions of edges)
+    # long-lived session (or a many-round run over billions of edges)
     # accumulates every round's edge set in executor storage memory;
     # only the final round's blocks — which the returned DataFrame
     # still reads — outlive the call.
@@ -119,32 +127,44 @@ def connected_components(
     if stats is not None:
         stats["rounds"] = 0
         stats["edges"] = []
-    prev_sig = None
     for _ in range(max_rounds):
-        # lazy checkpoint: the convergence probe below is the action
+        # lazy checkpoint: the star-forest probe below is the action
         # that materializes it — one Spark job per round, not two.
         # (Batching TWO star pairs per checkpoint was tried and is
         # ~1.5-3x SLOWER: each star consumes its input twice, so the
         # un-checkpointed first pair re-executes ~4x inside the second.)
         e = _small_star(_large_star(e)).localCheckpoint(eager=False)
         new_id = _checkpoint_rdd_id(e)
-        # one-row convergence probe: stable (count, xor-of-edge-hashes)
-        # means the star set stopped changing. XOR, not SUM: order-
-        # independent like sum, but can't hit ANSI long overflow.
-        sig = e.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        sig = (sig["n"], sig["h"])
+        # star-forest probe, one groupBy: tag sources 1 and targets 2;
+        # a node with bit_or == 3 is both (a path of length 2), and a
+        # source with two out-edges points at two centers. Both checks
+        # are needed — without the out-degree one a node between two
+        # centers passes and the larger center's leaves keep it as
+        # their label.
+        deg = (
+            e.select(F.col("u").alias("n"), F.lit(1).alias("t"))
+            .union(e.select(F.col("v").alias("n"), F.lit(2).alias("t")))
+            .groupBy("n")
+            .agg(F.bit_or("t").alias("tags"), F.count_if(F.col("t") == 1).alias("out"))
+        )
+        aggs = [F.count_if((F.col("tags") == 3) | (F.col("out") > 1)).alias("bad")]
         if stats is not None:
-            stats["rounds"] += 1
-            stats["edges"].append(sig[0])
+            aggs.append(F.sum("out").alias("n"))
+        probe = deg.agg(*aggs).collect()[0]
         _unpersist(cur_id)
         cur_id = new_id
-        if sig == prev_sig:
+        if stats is not None:
+            stats["rounds"] += 1
+            stats["edges"].append(probe["n"] or 0)
+        if probe["bad"] == 0:
             break
-        prev_sig = sig
-    # converged edges are (node -> component-min) stars; the centers
+    else:
+        _unpersist(cur_id)
+        raise RuntimeError(
+            f"connected_components: no star forest after {max_rounds} "
+            "rounds; raise max_rounds"
+        )
+    # a star forest is (leaf -> component-min) edges; the centers
     # label themselves
     return (
         e.select(F.col("u").alias("node"), F.col("v").alias("component"))

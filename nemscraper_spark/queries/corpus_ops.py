@@ -52,18 +52,11 @@ def _shingles(spark, sf_dir):
     return _shingle_frame(d)
 
 
-# Exact-edge trunk: the near-dup edge set is identical for both
-# consumers in a session (dedup_cluster_components,
-# dedup_keep_canonical — the #1 and #4 heaviest suite entries, each
-# rebuilding the full explode→collapse→inverted-index-join trunk),
-# and like the counted-pairs trunk its OUTPUT is tiny (one row per
-# surviving edge).
 def _dup_edges(spark, sf_dir):
     """Connectivity-equivalent near-dup edge set: exact-duplicate
     collapse first, word-3-gram Jaccard >= 0.5 pairs (inverted-index
     equi-join, as ngram_jaccard_pairs) over the REPRESENTATIVES only,
-    plus rep->member star edges for the collapsed docs.  Built once
-    per (session, sf_dir) and persisted (see trunk_cache).
+    plus rep->member star edges for the collapsed docs.
 
     The exact-collapse step is what keeps this linear: identical docs
     (boilerplate repeated millions of times in a crawl) share every
@@ -80,47 +73,60 @@ def _dup_edges(spark, sf_dir):
     any-collision probability is ~1e-9 — far below the float-
     determinism tolerances everywhere else."""
 
-    def build():
-        d = fan_out(load_table(spark, sf_dir, "documents"))
-        mapping = (
-            d.select("doc_id", F.xxhash64("text").alias("th"))
-            .withColumn("rep", F.min("doc_id").over(Window.partitionBy("th")))
-            .select("doc_id", "rep")
-        )
-        star = mapping.filter(F.col("doc_id") != F.col("rep")).select(
-            F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b")
-        )
-        reps = mapping.filter(F.col("doc_id") == F.col("rep")).select("doc_id")
-        sh = (
-            _shingles(spark, sf_dir)
-            .join(reps, "doc_id")
-            .select("doc_id", F.xxhash64("shingle").alias("shingle"))
-        )
-        cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-        a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-        b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-        inter = (
-            a.join(b, "shingle")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("n_common"))
-        )
-        ca = cnt.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-        cb = cnt.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-        jac = F.col("n_common").cast("double") / (
-            F.col("na") + F.col("nb") - F.col("n_common")
-        )
-        near = (
-            inter.join(F.broadcast(ca), "doc_a")
-            .join(F.broadcast(cb), "doc_b")
-            .filter(jac >= 0.5)
-            .select("doc_a", "doc_b")
-        )
-        return near.unionByName(star)
+    d = fan_out(load_table(spark, sf_dir, "documents"))
+    mapping = (
+        d.select("doc_id", F.xxhash64("text").alias("th"))
+        .withColumn("rep", F.min("doc_id").over(Window.partitionBy("th")))
+        .select("doc_id", "rep")
+    )
+    star = mapping.filter(F.col("doc_id") != F.col("rep")).select(
+        F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b")
+    )
+    reps = mapping.filter(F.col("doc_id") == F.col("rep")).select("doc_id")
+    sh = (
+        _shingles(spark, sf_dir)
+        .join(reps, "doc_id")
+        .select("doc_id", F.xxhash64("shingle").alias("shingle"))
+    )
+    cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
+    inter = (
+        a.join(b, "shingle")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("n_common"))
+    )
+    ca = cnt.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
+    cb = cnt.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    jac = F.col("n_common").cast("double") / (
+        F.col("na") + F.col("nb") - F.col("n_common")
+    )
+    near = (
+        inter.join(F.broadcast(ca), "doc_a")
+        .join(F.broadcast(cb), "doc_b")
+        .filter(jac >= 0.5)
+        .select("doc_a", "doc_b")
+    )
+    return near.unionByName(star)
 
+
+# Component trunk: the near-dup labelling is identical for both
+# consumers in a session (dedup_cluster_components,
+# dedup_keep_canonical), so the graph is contracted once and its tiny
+# (node, component) output persisted.  The edge set under it is not
+# persisted as well: the contraction's first eager checkpoint already
+# materializes it once.
+def _dup_components(spark, sf_dir):
+    """(node, component) over _dup_edges, built once per (session,
+    sf_dir) and persisted (see trunk_cache)."""
     from nemscraper_spark.queries.trunk_cache import trunk
 
-    return trunk("dup_edges", session_key(spark, sf_dir), build)
+    return trunk(
+        "dup_components",
+        session_key(spark, sf_dir),
+        lambda: connected_components(_dup_edges(spark, sf_dir), "doc_a", "doc_b"),
+    )
 
 
 # recursive-CTE transitive closure over Jaccard>=0.5 3-gram edges,
@@ -174,7 +180,7 @@ def dedup_cluster_components(spark, sf_dir):
     at test scale, which is exactly why Spark gets the star algorithm
     instead.
     """
-    comp = connected_components(_dup_edges(spark, sf_dir), "doc_a", "doc_b")
+    comp = _dup_components(spark, sf_dir)
     w = Window.partitionBy("component")
     return comp.select(
         F.col("node").alias("doc_id"),
@@ -1146,7 +1152,7 @@ def dedup_keep_canonical(spark, sf_dir):
     shuffle-hash when a crawl corpus is 30-50% duplicates (a set that
     big must never be broadcast). Either way no nested loop — pinned in
     test_plan_quality."""
-    comp = connected_components(_dup_edges(spark, sf_dir), "doc_a", "doc_b")
+    comp = _dup_components(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
     j = d.select("doc_id").join(
         comp.select(F.col("node").alias("doc_id"), "component"), "doc_id", "left"

@@ -6,7 +6,7 @@ build everything after the family with ``session_key``.  An entry is
 one of three kinds:
 
 - a persisted frame (``trunk``): a shared sub-plan whose OUTPUT is
-  small (candidate pairs, near-dup edges, ANN grids) while its build
+  small (candidate pairs, near-dup components, ANN grids) while its build
   pays the family's full explode/join/window cost, so it is built
   once per session, persisted MEMORY_AND_DISK and read by every
   consumer (BENCH_r10: second dedup consumer 6.5 s -> ~1.4 s);

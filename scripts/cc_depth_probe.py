@@ -9,7 +9,9 @@ algorithm (not the box) scales:
 
   * rounds to convergence (must grow ~log of component size, and the
     replication model keeps component sizes constant, so rounds should
-    be FLAT in the factor);
+    be FLAT in the factor).  The loop stops at the first round whose
+    edges form a star forest, so the count no longer includes a
+    confirming round that changed nothing;
   * per-round edge counts (monotone collapse toward star graphs);
   * max node degree of the input edge set (the star-join's hottest
     key — skew exposure is bounded by this, not by corpus size).

@@ -4,6 +4,9 @@ propagation), and invariants the SQL oracles don't express."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from nemscraper_spark.operators.components import connected_components
@@ -240,6 +243,92 @@ def test_components_match_union_find(spark, edges):
         return {n: min(members) for c, members in comp.items() for n in members}
 
     assert canon(got) == canon(expected)
+
+
+def _seeded_graph(rng, i):
+    """Graph i of the seeded family: sizes 10-300, every third a
+    shuffled chain (the long-diameter case), the rest random edges;
+    every graph gains reversed copies, exact duplicates and a
+    self-loop."""
+    n = rng.randint(10, 300)
+    if i % 3 == 0:
+        perm = list(range(n))
+        rng.shuffle(perm)
+        edges = [(perm[j], perm[j + 1]) for j in range(n - 1)]
+    else:
+        edges = [
+            (rng.randrange(n), rng.randrange(n))
+            for _ in range(rng.randint(1, 2 * n))
+        ]
+    edges += [(v, u) for u, v in rng.sample(edges, min(5, len(edges)))]
+    edges += edges[:3] + [(n // 2, n // 2)]
+    return edges
+
+
+def test_components_equal_union_find_on_seeded_graphs(spark):
+    """Star-forest stopping gives exactly the union-find labelling
+    (component = min node id, not just the same partition) on seeded
+    random graphs and shuffled chains with duplicate, reversed and
+    self-loop edges."""
+    rng = random.Random(20261017)
+    for i in range(12):
+        edges = _seeded_graph(rng, i)
+        e = spark.createDataFrame(edges, "u long, v long")
+        assert _labels(connected_components(e)) == _union_find(edges), i
+
+
+def test_components_star_input_runs_one_round(spark):
+    """A graph that is already a star stops after the round that finds
+    it: no confirming round is run."""
+    e = spark.createDataFrame([(2, 1), (3, 1), (4, 1)], "u long, v long")
+    stats: dict = {}
+    got = _labels(connected_components(e, stats=stats))
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1}
+    assert stats["rounds"] == 1
+    assert stats["edges"] == [3]
+
+
+def test_components_node_between_two_centers_is_not_converged(spark):
+    """The path 0-2-3-5-1 contracts in round 1 to (2,0) (2,1) (3,0)
+    (5,1): no node is both source and target, but node 2 points at two
+    centers. Stopping there would label 1 and 5 with 1; the out-degree
+    condition forces more rounds."""
+    e = spark.createDataFrame([(0, 2), (1, 5), (3, 2), (3, 5)], "u long, v long")
+    stats: dict = {}
+    got = _labels(connected_components(e, stats=stats))
+    assert got == {n: 0 for n in (0, 1, 2, 3, 5)}
+    assert stats["edges"][0] == 4 and stats["rounds"] > 1
+
+
+def test_components_round_cap_raises(spark):
+    """Reaching max_rounds before a star forest is an error, never a
+    partial labelling (a 60-node chain needs more than 2 rounds)."""
+    n = 60
+    e = spark.createDataFrame([(i, i + 1) for i in range(n)], "u long, v long")
+    with pytest.raises(RuntimeError, match="no star forest after 2 rounds"):
+        connected_components(e, max_rounds=2)
+
+
+def test_component_queries_leave_session_conf_unchanged(spark, sf_dir):
+    """Every query that calls the operator leaves the caller's session
+    conf as it found it, trunk builds included (persist_trunk_adaptive
+    toggles canChangeCachedPlanOutputPartitioning around the build)."""
+    from nemscraper_spark.queries import trunk_cache as tc
+
+    tc.clear_trunk_caches()
+    try:
+        for name in (
+            "dedup_cluster_components",
+            "dedup_keep_canonical",
+            "dedup_groups_lsh",
+            "dedup_groups_lsh_md5",
+            "semantic_dedup_keep_list",
+        ):
+            before = dict(spark.conf.getAll)
+            REGISTRY[name].fn(spark, sf_dir).collect()
+            assert dict(spark.conf.getAll) == before, name
+    finally:
+        tc.clear_trunk_caches()
 
 
 def test_redaction_counts_and_no_surviving_terms(spark, sf_dir):
@@ -498,34 +587,34 @@ def test_skyline_adversarial_ties_and_chains(spark, tmp_path):
     assert 3 not in expected  # single-axis strict domination enforced
 
 
-def test_dup_edges_trunk_is_memoized_per_session(spark, sf_dir):
-    """r10 queue item a (r11: shared registry): the exact near-dup
-    edge trunk shared by dedup_cluster_components and
-    dedup_keep_canonical is built once per (session, sf_dir) and
-    persisted in trunk_cache._TRUNKS under its family key; two
-    spellings of the directory share ONE trunk (norm_dir); dropping
-    the entry and rebuilding yields the same edge set."""
+def test_dup_components_trunk_is_memoized_per_session(spark, sf_dir):
+    """The near-dup component labelling shared by
+    dedup_cluster_components and dedup_keep_canonical is contracted
+    once per (session, sf_dir) and persisted in trunk_cache._TRUNKS
+    under its family key; two spellings of the directory share ONE
+    trunk (norm_dir); dropping the entry and rebuilding yields the same
+    labelling."""
     from nemscraper_spark.queries import corpus_ops as co
     from nemscraper_spark.queries import trunk_cache as tc
 
     app = spark.sparkContext.applicationId
-    key = ("dup_edges", app, tc.norm_dir(sf_dir))
+    key = ("dup_components", app, tc.norm_dir(sf_dir))
     saved = tc._TRUNKS.pop(key, None)
     try:
-        e1 = co._dup_edges(spark, sf_dir)
+        e1 = co._dup_components(spark, sf_dir)
         assert key in tc._TRUNKS
-        e2 = co._dup_edges(spark, sf_dir)
+        e2 = co._dup_components(spark, sf_dir)
         assert e1 is e2  # second consumer reuses the persisted trunk
         # r10 ADVICE: a trailing-slash spelling is the SAME corpus —
         # no duplicate trunk is built or pinned
-        e2b = co._dup_edges(spark, str(sf_dir) + "/")
+        e2b = co._dup_components(spark, str(sf_dir) + "/")
         assert e2b is e1
         rows = sorted(map(tuple, e1.collect()))
-        assert rows, "degenerate corpus: no dup edges at sf0.001"
+        assert rows, "degenerate corpus: no dup components at sf0.001"
         # drop + unpersist; a rebuild matches exactly
         tc._TRUNKS.pop(key)
         e1.unpersist()
-        e3 = co._dup_edges(spark, sf_dir)
+        e3 = co._dup_components(spark, sf_dir)
         assert e3 is not e1
         assert sorted(map(tuple, e3.collect())) == rows
     finally:

@@ -907,3 +907,31 @@ def test_second_consumer_reads_persisted_trunk(spark, sf_dir):
         assert "InMemoryTableScan" in plan(second)
     finally:
         tc.clear_trunk_caches()
+
+
+def test_second_dedup_consumer_reads_persisted_components(spark, sf_dir, monkeypatch):
+    """The near-dup graph is contracted once per session: after
+    dedup_cluster_components builds the dup_components trunk,
+    dedup_keep_canonical reads it as an InMemoryTableScan and runs no
+    star round of its own (zero localCheckpoint calls)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    import nemscraper_spark.queries.trunk_cache as tc
+    from nemscraper_spark.queries import REGISTRY
+
+    tc.clear_trunk_caches()
+    try:
+        REGISTRY["dedup_cluster_components"].fn(spark, sf_dir).collect()
+        calls = []
+        real = DataFrame.localCheckpoint
+
+        def counting(self, *args, **kwargs):
+            calls.append(1)
+            return real(self, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+        second = REGISTRY["dedup_keep_canonical"].fn(spark, sf_dir)
+        assert "InMemoryTableScan" in plan(second)
+        assert calls == []
+    finally:
+        tc.clear_trunk_caches()
