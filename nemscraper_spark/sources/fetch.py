@@ -11,9 +11,10 @@ ingest watches. Reference parity:
     ingest scan); 3 retries with exponential backoff 1<<attempt.
   * poll loop (urls.rs:167-209): round-robin feeds, one fetch per tick.
 
-Dedup against the `downloaded` history ledger happens in the caller
-(plans/history.TableHistory.filter_unseen — M1), mirroring
-main.rs:177-179.
+Dedup against the `downloaded` history ledger (M1, main.rs:177-179)
+is the caller's batch predicate ``already_downloaded``: every name a
+tick lists goes in at once and the set already seen comes out, so one
+ledger scan (plans/history.TableHistory.seen) covers the whole listing.
 """
 
 from __future__ import annotations
@@ -57,6 +58,10 @@ def fetch_feed_links(
     raise RuntimeError(f"feed fetch failed after {FEED_RETRIES} tries: {feed_url}") from last_err
 
 
+def _zip_name(url: str) -> str:
+    return os.path.basename(urllib.parse.urlparse(url).path)
+
+
 def download_zip(
     url: str,
     dest_dir: str,
@@ -66,7 +71,7 @@ def download_zip(
     """Fetch one ZIP into dest_dir with .tmp+rename and exponential
     backoff. Returns {'filename', 'url', 'size_bytes'} (the
     DownloadedRow shape, FIXTURES.md §C)."""
-    name = os.path.basename(urllib.parse.urlparse(url).path)
+    name = _zip_name(url)
     final = os.path.join(dest_dir, name)
     tmp = final + ".tmp"
     last_err: Exception | None = None
@@ -86,17 +91,20 @@ def download_zip(
 def poll_feeds_once(
     feeds: Iterable[str],
     dest_dir: str,
-    already_downloaded: Callable[[str], bool] = lambda name: False,
+    already_downloaded: Callable[[list[str]], set[str]] = lambda names: set(),
     get: Callable[[str], bytes] = _default_get,
 ) -> list[dict]:
-    """One tick of the poll loop: scan every feed, download unseen ZIPs.
-    Returns DownloadedRow dicts for the history ledger."""
+    """One tick of the poll loop: list every feed, then download the
+    ZIPs neither the ledger (``already_downloaded``: names in, the set
+    already seen out) nor the landing dir holds. Returns DownloadedRow
+    dicts for the history ledger."""
     os.makedirs(dest_dir, exist_ok=True)
+    urls = [url for feed in feeds for url in fetch_feed_links(feed, get=get)]
+    done = already_downloaded([_zip_name(u) for u in urls])
     rows = []
-    for feed in feeds:
-        for url in fetch_feed_links(feed, get=get):
-            name = os.path.basename(urllib.parse.urlparse(url).path)
-            if already_downloaded(name) or os.path.exists(os.path.join(dest_dir, name)):
-                continue  # in-flight/finished dedup (main.rs:147-179)
-            rows.append(download_zip(url, dest_dir, get=get))
+    for url in urls:
+        name = _zip_name(url)
+        if name in done or os.path.exists(os.path.join(dest_dir, name)):
+            continue  # in-flight/finished dedup (main.rs:147-179)
+        rows.append(download_zip(url, dest_dir, get=get))
     return rows

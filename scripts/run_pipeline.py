@@ -30,11 +30,65 @@ import os
 import signal
 import sys
 import threading
+import time
+from contextlib import contextmanager
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
+
+
+STAGES = ("poll", "ledger", "ingest", "compact", "outputs", "vacuum")
+
+
+class _StageClock(dict):
+    """Per-stage seconds of one tick (time.perf_counter). Stages nest —
+    the ledger lookup runs inside the poll — and a nested stage's time
+    is taken out of its enclosing one, so the stages add up to the
+    tick."""
+
+    def __init__(self):
+        super().__init__(dict.fromkeys(STAGES, 0.0))
+        self._open: list[str] = []
+
+    @contextmanager
+    def __call__(self, stage: str):
+        self._open.append(stage)
+        t0 = time.perf_counter()
+        try:
+            yield
+        finally:
+            dt = time.perf_counter() - t0
+            self._open.pop()
+            self[stage] += dt
+            if self._open:
+                self[self._open[-1]] -= dt
+
+    def timed(self, stage: str, fn):
+        def wrapper(*a, **kw):
+            with self(stage):
+                return fn(*a, **kw)
+
+        return wrapper
+
+
+def compact_tables(spark, parquet_dir: str) -> dict:
+    """Compact every table under ``parquet_dir`` (compactor.rs:584-792).
+    Tables are disjoint directories, so their ``compact_table`` calls
+    run from one driver-side thread pool — the shape ``ingest`` uses
+    for its per-table writes."""
+    from nemscraper_spark.plans.compact import compact_table
+
+    troots = [t for t in sorted(glob.glob(os.path.join(parquet_dir, "*"))) if os.path.isdir(t)]
+    if len(troots) > 1:
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=min(8, len(troots))) as pool:
+            results = list(pool.map(lambda t: compact_table(spark, t), troots))
+    else:
+        results = [compact_table(spark, t) for t in troots]
+    return {os.path.basename(t): res for t, res in zip(troots, results) if res}
 
 
 def run_once(
@@ -44,8 +98,8 @@ def run_once(
     sf_dir: str | None,
     mirror: str | None = None,
 ) -> dict:
-    """One tick: returns a summary dict of what moved."""
-    from nemscraper_spark.plans.compact import compact_table
+    """One tick: returns a summary dict of what moved, with the seconds
+    each stage took in ``stage_s``."""
     from nemscraper_spark.plans.history import TableHistory
     from nemscraper_spark.sources import fetch
     from nemscraper_spark.sources.nemcsv import ingest
@@ -59,47 +113,50 @@ def run_once(
 
     downloaded = TableHistory(spark, history_root, "downloaded")
     processed = TableHistory(spark, history_root, "processed")
+    clock = _StageClock()
 
     summary: dict = {"downloaded": 0, "processed": 0, "tables": {}, "compacted": {}}
 
     # 1. poll + download, deduped against the ledger (main.rs:147-197)
     if feeds:
-        seen = {r.filename for r in downloaded.read().collect()} if feeds else set()
-        rows = fetch.poll_feeds_once(
-            feeds, zips_dir, already_downloaded=lambda n: n in seen
-        )
+        with clock("poll"):
+            rows = fetch.poll_feeds_once(
+                feeds, zips_dir, already_downloaded=clock.timed("ledger", downloaded.seen)
+            )
         if rows:
-            downloaded.add(rows)
+            with clock("ledger"):
+                downloaded.add(rows)
         summary["downloaded"] = len(rows)
 
     # 2. ingest every ZIP the processed ledger hasn't seen (main.rs:248-275)
     all_zips = sorted(glob.glob(os.path.join(zips_dir, "*.zip")))
-    done = {r.filename for r in processed.read().collect()}
+    with clock("ledger"):
+        done = processed.seen(os.path.basename(z) for z in all_zips)
     todo = [z for z in all_zips if os.path.basename(z) not in done]
     if todo:
-        counts = ingest(spark, todo, parquet_dir)
-        processed.add(
-            [
-                {"filename": os.path.basename(z), "url": "", "size_bytes": os.path.getsize(z)}
-                for z in todo
-            ]
-        )
+        with clock("ingest"):
+            counts = ingest(spark, todo, parquet_dir)
+        with clock("ledger"):
+            processed.add(
+                [
+                    {"filename": os.path.basename(z), "size_bytes": os.path.getsize(z)}
+                    for z in todo
+                ]
+            )
         summary["processed"] = len(todo)
         summary["tables"] = counts
 
     # 3. compact each table's multi-file partitions (compactor.rs:584-792)
-    for troot in sorted(glob.glob(os.path.join(parquet_dir, "*"))):
-        if os.path.isdir(troot):
-            res = compact_table(spark, troot)
-            if res:
-                summary["compacted"][os.path.basename(troot)] = res
+    with clock("compact"):
+        summary["compacted"] = compact_tables(spark, parquet_dir)
 
     # 3b. mirror the compacted tree to the bucket (S15 — the
     #     reference's gcloud-sync sidecar, scripts/gcloud-sync.sh:22-41)
     if mirror:
         from nemscraper_spark.sources.sync import mirror_tree
 
-        summary["mirror"] = mirror_tree(parquet_dir, mirror)
+        with clock("outputs"):
+            summary["mirror"] = mirror_tree(parquet_dir, mirror)
 
     # 4. analytics outputs (crunch.rs:39-82's 01..05 parquet), snappy
     #    like the reference's hot outputs (crunch.rs:163-166)
@@ -113,20 +170,23 @@ def run_once(
         )
 
         # the full crunch output set 01..05 (crunch.rs:39-82)
-        for name, df in (
-            ("01_frequency_measure", fpp_frequency_measure_ewma(spark, sf_dir)),
-            ("02_reference_trajectory", reference_trajectory(spark, sf_dir)),
-            ("03_unit_deviations", unit_deviations(spark, sf_dir)),
-            ("04_performance", performance(spark, sf_dir)),
-            ("05_actual_performance", actual_performance(spark, sf_dir)),
-        ):
-            df.write.mode("overwrite").option("compression", "snappy").parquet(
-                os.path.join(output_dir, f"{name}.parquet")
-            )
+        with clock("outputs"):
+            for name, df in (
+                ("01_frequency_measure", fpp_frequency_measure_ewma(spark, sf_dir)),
+                ("02_reference_trajectory", reference_trajectory(spark, sf_dir)),
+                ("03_unit_deviations", unit_deviations(spark, sf_dir)),
+                ("04_performance", performance(spark, sf_dir)),
+                ("05_actual_performance", actual_performance(spark, sf_dir)),
+            ):
+                df.write.mode("overwrite").option("compression", "snappy").parquet(
+                    os.path.join(output_dir, f"{name}.parquet")
+                )
         summary["outputs"] = 5
 
-    downloaded.vacuum()
-    processed.vacuum()
+    with clock("vacuum"):
+        downloaded.vacuum()
+        processed.vacuum()
+    summary["stage_s"] = {k: round(v, 4) for k, v in clock.items()}
     return summary
 
 
@@ -217,7 +277,6 @@ def run_streaming(
     One tick == drain-everything-available (availableNow trigger), so
     --once is a synchronous, testable unit exactly like the batch mode.
     """
-    from nemscraper_spark.plans.compact import compact_table
     from nemscraper_spark.plans.history import TableHistory
     from nemscraper_spark.sources import fetch
     from nemscraper_spark.streaming.ingest import start_ingest_stream
@@ -250,9 +309,8 @@ def run_streaming(
     def _tick() -> dict:
         summary: dict = {"downloaded": 0, "tables": {}, "compacted": {}}
         if feeds:
-            seen = {r.filename for r in downloaded.read().collect()}
             rows = fetch.poll_feeds_once(
-                feeds, zips_dir, already_downloaded=lambda n: n in seen
+                feeds, zips_dir, already_downloaded=downloaded.seen
             )
             if rows:
                 downloaded.add(rows)
@@ -268,11 +326,7 @@ def run_streaming(
             history=processed,
         )
         q.awaitTermination()
-        for troot in sorted(glob.glob(os.path.join(parquet_dir, "*"))):
-            if os.path.isdir(troot):
-                res = compact_table(spark, troot)
-                if res:
-                    summary["compacted"][os.path.basename(troot)] = res
+        summary["compacted"] = compact_tables(spark, parquet_dir)
         if mirror:
             from nemscraper_spark.sources.sync import mirror_tree
 

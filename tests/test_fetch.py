@@ -75,7 +75,7 @@ def test_poll_tick_dedups_against_history_and_disk(tmp_path):
     rows = poll_feeds_once(
         ["http://feed.example/REPORTS/"],
         str(tmp_path),
-        already_downloaded=lambda n: n in seen,
+        already_downloaded=lambda names: seen.intersection(names),
         get=get,
     )
     assert [r["filename"] for r in rows] == ["PUBLIC_B_20220720_0002.ZIP"]
@@ -83,7 +83,7 @@ def test_poll_tick_dedups_against_history_and_disk(tmp_path):
     rows2 = poll_feeds_once(
         ["http://feed.example/REPORTS/"],
         str(tmp_path),
-        already_downloaded=lambda n: n in seen,
+        already_downloaded=lambda names: seen.intersection(names),
         get=get,
     )
     assert rows2 == []

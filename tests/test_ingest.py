@@ -12,6 +12,7 @@ from __future__ import annotations
 import glob
 import os
 import zipfile
+from datetime import datetime, timezone
 
 import pytest
 
@@ -208,8 +209,6 @@ def test_history_dedup_and_vacuum(spark, tmp_path):
     """table_history.rs:188-275 semantics: add → filter_unseen → vacuum
     → keys survive."""
     h = TableHistory(spark, str(tmp_path), "downloaded")
-    from datetime import datetime
-
     rows = [
         {"filename": "a.zip", "url": "u", "size_bytes": 10,
          "download_start": datetime(2024, 1, 1), "download_end": datetime(2024, 1, 1), "thread": 1},
@@ -229,6 +228,110 @@ def test_history_dedup_and_vacuum(spark, tmp_path):
         assert len(glob.glob(os.path.join(part, "*.parquet"))) == 1
     keys = {r.filename for r in h.read().collect()}
     assert keys == {"a.zip", "b.zip", "d.zip"}
+
+
+def _ledger_files(h, day):
+    return sorted(glob.glob(os.path.join(h.path, f"date={day}", "*.parquet")))
+
+
+def _spark_rows(h):
+    return sorted(tuple(r) for r in h.read().collect())
+
+
+def test_ledger_upgrade_from_spark_written_partition(spark, tmp_path):
+    """A partition written by the previous Spark-job ledger (INT96
+    timestamps, one file per write slice) and a file from the pyarrow
+    ``add`` share one partition: ``seen`` finds keys in both, ``vacuum``
+    leaves one file holding their union, and the Spark view reads the
+    same rows before and after."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from nemscraper_spark.plans.history import DOWNLOADED_SCHEMA
+
+    h = TableHistory(spark, str(tmp_path), "downloaded")
+
+    def at(hour):
+        return datetime(2024, 1, 1, hour, tzinfo=timezone.utc)
+
+    old = [("a.zip", "u", 10, at(3), at(4), 1), ("b.zip", "u", 20, at(5), None, 2)]
+    spark.createDataFrame(old, DOWNLOADED_SCHEMA).withColumn(
+        "date", F.date_format(F.col("download_start"), "yyyyMMdd")
+    ).write.mode("append").partitionBy("date").parquet(h.path)
+    spark_files = _ledger_files(h, "20240101")
+    ts_type = pq.ParquetFile(spark_files[0]).schema.column(3).physical_type
+    assert ts_type == "INT96"  # the old writer's timestamp encoding
+    h.add([{"filename": "c.zip", "url": "v", "download_start": at(6)}])
+    assert len(_ledger_files(h, "20240101")) == len(spark_files) + 1
+
+    assert h.seen(["a.zip", "b.zip", "c.zip", "z.zip"]) == {"a.zip", "b.zip", "c.zip"}
+    before = _spark_rows(h)
+    assert len(before) == 3
+    h.vacuum()
+    (merged,) = _ledger_files(h, "20240101")
+    assert sorted(pq.read_table(merged).column("filename").to_pylist()) == [
+        "a.zip", "b.zip", "c.zip",
+    ]
+    assert _spark_rows(h) == before
+    assert h.seen(["a.zip", "b.zip", "c.zip"]) == {"a.zip", "b.zip", "c.zip"}
+
+
+def test_ledger_vacuum_crash_before_source_delete_converges(spark, tmp_path, monkeypatch):
+    """A crash after the merged file is renamed in and before the
+    sources are deleted leaves every key visible (rows twice, never
+    missing); the next vacuum converges to one file without duplicate
+    rows."""
+    import pyarrow.parquet as pq
+
+    from nemscraper_spark.sources import fsutil
+
+    h = TableHistory(spark, str(tmp_path), "processed")
+    t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    names = ["a.zip", "b.zip", "c.zip"]
+    for n in names:
+        h.add([{"filename": n, "total_rows": 1, "processing_start": t0}])
+    assert len(_ledger_files(h, "20240101")) == 3
+
+    real_delete = fsutil.delete_file
+    crashed = []
+
+    def delete_once_crashes(path, missing_ok=True):
+        if not crashed:
+            crashed.append(path)
+            raise OSError("injected crash before the source delete")
+        real_delete(path, missing_ok)
+
+    monkeypatch.setattr(fsutil, "delete_file", delete_once_crashes)
+    with pytest.raises(OSError, match="injected crash"):
+        h.vacuum()
+    assert len(_ledger_files(h, "20240101")) == 4  # 3 sources + merged
+    assert h.seen(names + ["z.zip"]) == set(names)
+
+    h.vacuum()
+    (merged,) = _ledger_files(h, "20240101")
+    assert sorted(pq.read_table(merged).column("filename").to_pylist()) == names
+    assert h.seen(names) == set(names)
+
+
+def test_ledger_ops_run_no_spark_job(spark, tmp_path):
+    """add, seen and vacuum are driver-side file I/O: no Spark job runs
+    in their job group. A Spark read in the same group does show up,
+    so the pin can fail."""
+    sc = spark.sparkContext
+    h = TableHistory(spark, str(tmp_path), "downloaded")
+    sc.setJobGroup("ledger", "ledger operations")
+    try:
+        h.add([{"filename": "a.zip"}, {"filename": "b.zip"}])
+        h.add([{"filename": "c.zip"}])
+        assert h.seen(["a.zip", "c.zip", "z.zip"]) == {"a.zip", "c.zip"}
+        h.vacuum()
+        assert h.seen(["b.zip"]) == {"b.zip"}
+        assert sc.statusTracker().getJobIdsForGroup("ledger") == []
+        assert h.read().count() == 3
+        assert sc.statusTracker().getJobIdsForGroup("ledger") != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 @pytest.fixture()

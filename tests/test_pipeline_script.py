@@ -36,6 +36,9 @@ def test_pipeline_once_and_dedup(spark, tmp_path, sf_dir):
     assert s1["processed"] == 1
     assert s1["tables"]["FPP---UNIT_MW---1"] == 3
     assert s1["outputs"] == 5
+    assert set(s1["stage_s"]) == {"poll", "ledger", "ingest", "compact", "outputs", "vacuum"}
+    assert all(v >= 0 for v in s1["stage_s"].values())
+    assert s1["stage_s"]["ingest"] > 0 and s1["stage_s"]["outputs"] > 0
     out = os.path.join(work, "output", "04_performance.parquet")
     assert spark.read.parquet(out).count() > 0
 
@@ -43,6 +46,36 @@ def test_pipeline_once_and_dedup(spark, tmp_path, sf_dir):
     s2 = run_once(spark, work, [feed], None)
     assert s2["downloaded"] == 0
     assert s2["processed"] == 0
+
+
+def test_rerun_over_duplicate_ledger_rows_processes_nothing(spark, tmp_path):
+    """Duplicate rows in the processed ledger (a crash between a
+    vacuum's rename and its deletes, or a doubled append) are harmless:
+    a re-run ingests nothing and the parquet rows stay as they were."""
+    from nemscraper_spark.plans.history import TableHistory
+    from nemscraper_spark.sources.fsutil import parquet_rows
+
+    feed = _make_feed(tmp_path)
+    work = str(tmp_path / "work")
+    run_once(spark, work, [feed], None)
+    led = TableHistory(spark, os.path.join(work, "history"), "processed")
+    dup = {"filename": "PUBLIC_DISPATCHIS_20220720_0001.zip", "total_rows": 5}
+    led.add([dup, dup])
+    parquet = os.path.join(work, "parquet")
+    before = parquet_rows(parquet)
+
+    s = run_once(spark, work, [feed], None)
+    assert s["downloaded"] == 0
+    assert s["processed"] == 0
+    assert parquet_rows(parquet) == before
+    assert led.seen([dup["filename"]]) == {dup["filename"]}
+
+
+def test_run_once_leaves_session_conf_unchanged(spark, tmp_path):
+    feed = _make_feed(tmp_path)
+    before = dict(spark.conf.getAll)
+    run_once(spark, str(tmp_path / "work"), [feed], None)
+    assert dict(spark.conf.getAll) == before
 
 
 def test_loop_resweep_picks_up_outofband_zip(spark, tmp_path):
